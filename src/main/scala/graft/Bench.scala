@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark: times every SparkEntry query end-to-end.
   *
   * Timing honesty: results are materialized through the `noop` sink, not
@@ -14,16 +12,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus.toInt, "bench")
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(
-      java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
 
     // oracle-gated entries plus the bench/sweep-only shapes: the latter
     // are timed here like any other query (they ARE production shapes —

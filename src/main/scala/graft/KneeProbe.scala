@@ -49,15 +49,10 @@ object KneeProbe {
     // late-iteration edge-scan stages inflating ×5-8 (same class ×2-3
     // early in the run). A cluster sees executor-local GC far more
     // often; 60 s restores that cleaning cadence for the analog.
-    val spark = Sessions.tuned(
-      org.apache.spark.sql.SparkSession.builder()
-        .master("local[32]").appName("knee-probe"), partitions)
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "60s"))
-      .getOrCreate()
-    if (spark.sparkContext.getCheckpointDir.isEmpty)
-      spark.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
+    val spark = Sessions.start(
+      Sessions.builder(32, "knee-probe", partitions)
+        .config("spark.cleaner.periodicGC.interval",
+          sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "60s")))
     spark.sparkContext.setLogLevel("ERROR")
     val metrics = new ScaleSweep.MetricsListener
     spark.sparkContext.addSparkListener(metrics)

@@ -1,120 +1,101 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import scala.collection.immutable.ListMap
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Kernel-level plan auditor for the round-15 optimization work: prints
-  * `.explain("formatted")` for the LAZY form of the shared kernels the
-  * hot bench entries detach behind checkpoints (the query-level
-  * [[Explain]] shows only a LogicalRDD scan for those). Run before and
-  * after a kernel change to capture the plan diff the bench numbers
-  * claim (plans/r15/&lt;kernel&gt;_before.txt and _after.txt).
+/** Plan auditor: prints `.explain("formatted")` for shared kernels and
+  * registry queries, so pushdown/pruning/join-strategy regressions are
+  * visible (query-level findings → PLANS.md).
   *
-  *   sbt "runMain graft.PlanProbe /root/testdata/sf0.001 [kernel...]"
+  * Kernels are shown in their LAZY form: the hot bench entries detach
+  * them behind checkpoints, so a query-level plan shows only a
+  * LogicalRDD scan for those. Run before and after a kernel change to
+  * capture the plan diff the bench numbers claim
+  * (plans/r15/&lt;kernel&gt;_before.txt and _after.txt).
   *
-  * Kernels: lsh_pairs, undirect, ivfpq_topk_residual, encode_for_index,
-  * pagerank_iter.
+  *   sbt "runMain graft.PlanProbe <sfDir> [name...]"
+  *
+  * A name is a kernel (lsh_pairs, undirect, ivfpq_topk_residual,
+  * encode_for_index, hashed_embeddings, cell_assign, brute_topk, bm25,
+  * gopher, span_excise, line_dedup, xent) or any `SparkEntry.queries`
+  * entry; no names prints every kernel.
   */
 object PlanProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.001"
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(8, "plan-probe")
     spark.sparkContext.setLogLevel("ERROR")
-    val which = if (args.length > 1) args.drop(1).toSet
-      else Set("lsh_pairs", "undirect", "ivfpq_topk_residual",
-        "encode_for_index", "hashed_embeddings", "cell_assign",
-        "brute_topk", "bm25", "gopher", "span_excise", "line_dedup",
-        "xent")
 
-    val docs = Tables.load(spark, sfDir, "documents")
-    val emb = Tables.load(spark, sfDir, "embeddings")
-
-    if (which("lsh_pairs")) {
-      println("\n===== kernel: minHashLshPairs (lazy) =====")
-      operators.Dedup.minHashLshPairs(docs, "doc_id", "text",
-        5, 4, 3, materialize = false).explain("formatted")
-    }
-    if (which("undirect")) {
-      println("\n===== kernel: Graph.undirect =====")
-      val o = Tables.load(spark, sfDir, "orders")
-      val li = Tables.load(spark, sfDir, "lineitem")
-      val pairs = o.join(li, o("o_orderkey") === li("l_orderkey"))
-        .select((col("o_custkey") * 2).as("src"),
-          (col("l_suppkey") * 2 + 1).as("dst"))
-      operators.Graph.undirect(pairs, "src", "dst").explain("formatted")
-    }
-    if (which("ivfpq_topk_residual")) {
-      println("\n===== kernel: ivfPqTopK residual (lazy tail; trains eagerly) =====")
-      val queries = emb.filter(col("vec_id") < 4)
-      operators.Similarity.ivfPqTopK(emb, queries, "vec_id", "embedding",
-        k = 3, nlist = 4, nprobe = 2, nsub = 4, ksub = 4, residual = true)
-        .explain("formatted")
-    }
-    if (which("encode_for_index")) {
-      println("\n===== kernel: encodeForIndex (stored-index build/append row set) =====")
+    lazy val docs = Tables.load(spark, sfDir, "documents")
+    lazy val emb = Tables.load(spark, sfDir, "embeddings")
+    def centroids(): DataFrame = {
       val dim = emb.select(size(col("embedding"))).head().getInt(0)
-      val nsub = 4
-      require(dim % nsub == 0)
-      val centDf = spark.createDataFrame(Seq(
+      spark.createDataFrame(Seq(
         (0, Array.fill(dim)(0.25f)), (1, Array.fill(dim)(-0.25f))))
         .toDF("cell", "centroid")
-      val books = Seq.tabulate(nsub)(j =>
-        Seq.tabulate(4)(c => Seq.fill(dim / nsub)(0.1f * (j + c))))
-      operators.Similarity.encodeForIndex(emb, "vec_id", "embedding",
-        centDf, books, residual = true).explain("formatted")
     }
-    if (which("hashed_embeddings")) {
-      println("\n===== kernel: TextEmbedding.hashedEmbeddings =====")
-      operators.TextEmbedding.hashedEmbeddings(docs, "doc_id", "text", 16)
-        .explain("formatted")
-    }
-    if (which("cell_assign")) {
-      println("\n===== kernel: Similarity.corpusCellAssignment =====")
-      val dim = emb.select(size(col("embedding"))).head().getInt(0)
-      val centDf = spark.createDataFrame(Seq(
-        (0, Array.fill(dim)(0.25f)), (1, Array.fill(dim)(-0.25f))))
-        .toDF("cell", "centroid")
-      operators.Similarity.corpusCellAssignment(emb, "vec_id", "embedding",
-        centDf).explain("formatted")
-    }
-    if (which("brute_topk")) {
-      println("\n===== kernel: Similarity.bruteForceTopK (fused cosine) =====")
-      operators.Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 4),
-        "vec_id", "embedding", 3,
-        operators.Similarity.cosineFused(spark, _, _)).explain("formatted")
-    }
-    if (which("bm25")) {
-      println("\n===== kernel: Retrieval.bm25TopK (lazy) =====")
-      operators.Retrieval.bm25TopK(docs, "doc_id", "text",
-        col("doc_id") < 4, 5, materialize = false).explain("formatted")
-    }
-    if (which("gopher")) {
-      println("\n===== kernel: Quality.gopherRules =====")
-      operators.Quality.gopherRules(docs, "doc_id", "text")
-        .explain("formatted")
-    }
-    if (which("span_excise")) {
-      println("\n===== kernel: SpanDedup.removeDupSpans =====")
-      operators.SpanDedup.removeDupSpans(docs, "doc_id", "text", 5)
-        .explain("formatted")
-    }
-    if (which("line_dedup")) {
-      println("\n===== kernel: LineDedup.dedupLines =====")
-      operators.LineDedup.dedupLines(docs, "doc_id",
-        graft.functions.TextFunctions.wordChunks(col("text"), 10), 2)
-        .explain("formatted")
-    }
-    if (which("xent")) {
-      println("\n===== kernel: LanguageModel.crossEntropy =====")
-      operators.LanguageModel.crossEntropy(docs, "doc_id", "text",
-        operators.LanguageModel.unigramLm(docs, "text"))
-        .explain("formatted")
+
+    val kernels: ListMap[String, (String, () => DataFrame)] = ListMap(
+      "lsh_pairs" -> ("minHashLshPairs (lazy)", () =>
+        operators.Dedup.minHashLshPairs(docs, "doc_id", "text",
+          5, 4, 3, materialize = false)),
+      "undirect" -> ("Graph.undirect", () => {
+        val o = Tables.load(spark, sfDir, "orders")
+        val li = Tables.load(spark, sfDir, "lineitem")
+        val pairs = o.join(li, o("o_orderkey") === li("l_orderkey"))
+          .select((col("o_custkey") * 2).as("src"),
+            (col("l_suppkey") * 2 + 1).as("dst"))
+        operators.Graph.undirect(pairs, "src", "dst")
+      }),
+      "ivfpq_topk_residual" ->
+        ("ivfPqTopK residual (lazy tail; trains eagerly)", () =>
+          operators.Similarity.ivfPqTopK(emb, emb.filter(col("vec_id") < 4),
+            "vec_id", "embedding", k = 3, nlist = 4, nprobe = 2, nsub = 4,
+            ksub = 4, residual = true)),
+      "encode_for_index" ->
+        ("encodeForIndex (stored-index build/append row set)", () => {
+          val dim = emb.select(size(col("embedding"))).head().getInt(0)
+          val nsub = 4
+          require(dim % nsub == 0)
+          val books = Seq.tabulate(nsub)(j =>
+            Seq.tabulate(4)(c => Seq.fill(dim / nsub)(0.1f * (j + c))))
+          operators.Similarity.encodeForIndex(emb, "vec_id", "embedding",
+            centroids(), books, residual = true)
+        }),
+      "hashed_embeddings" -> ("TextEmbedding.hashedEmbeddings", () =>
+        operators.TextEmbedding.hashedEmbeddings(docs, "doc_id", "text", 16)),
+      "cell_assign" -> ("Similarity.corpusCellAssignment", () =>
+        operators.Similarity.corpusCellAssignment(emb, "vec_id", "embedding",
+          centroids())),
+      "brute_topk" -> ("Similarity.bruteForceTopK (fused cosine)", () =>
+        operators.Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 4),
+          "vec_id", "embedding", 3, operators.Similarity.cosineFused(_, _))),
+      "bm25" -> ("Retrieval.bm25TopK (lazy)", () =>
+        operators.Retrieval.bm25TopK(docs, "doc_id", "text",
+          col("doc_id") < 4, 5, materialize = false)),
+      "gopher" -> ("Quality.gopherRules", () =>
+        operators.Quality.gopherRules(docs, "doc_id", "text")),
+      "span_excise" -> ("SpanDedup.removeDupSpans", () =>
+        operators.SpanDedup.removeDupSpans(docs, "doc_id", "text", 5)),
+      "line_dedup" -> ("LineDedup.dedupLines", () =>
+        operators.LineDedup.dedupLines(docs, "doc_id",
+          graft.functions.TextFunctions.wordChunks(col("text"), 10), 2)),
+      "xent" -> ("LanguageModel.crossEntropy", () =>
+        operators.LanguageModel.crossEntropy(docs, "doc_id", "text",
+          operators.LanguageModel.unigramLm(docs, "text"))))
+
+    val names = if (args.length > 1) args.drop(1).toSeq else kernels.keys.toSeq
+    names.foreach { n =>
+      kernels.get(n) match {
+        case Some((title, plan)) =>
+          println(s"\n===== kernel: $title =====")
+          plan().explain("formatted")
+        case None =>
+          println(s"\n===== $n =====")
+          SparkEntry.queries(n)(spark, sfDir).explain("formatted")
+      }
     }
     spark.stop()
   }

@@ -236,7 +236,7 @@ object ScaleStress {
     time("brute-force ANN: 10 queries x 20k vectors (native expr)") {
       operators.Similarity.bruteForceTopK(bigEmb, bigEmb.filter($"vec_id" < 10),
         "vec_id", "embedding", 5,
-        (a, b) => functions.CosineSimilarity.column(spark, a, b))
+        (a, b) => functions.CosineSimilarity.column(a, b))
         .write.format("noop").mode("overwrite").save()
     }
     time("LSH-bucketed ANN: same, sign-bucket prefilter") {
@@ -297,7 +297,7 @@ object ScaleStress {
     }
     time("misra_gries(40) heavy hitters over 50k docs' tokens") {
       bigDocs.select(explode(functions.TextFunctions.tokens($"text")).as("t"))
-        .agg(functions.MisraGries.column(spark, $"t", 40))
+        .agg(functions.MisraGries.column($"t", 40))
         .write.format("noop").mode("overwrite").save()
     }
     time("weighted sample 1000 of 50k docs") {
@@ -318,7 +318,7 @@ object ScaleStress {
     }
     time("t-digest p50/p95/p99 of 2M event values (delta=100)",
         noSpill = true) {
-      bigEv.agg(functions.TDigestQuantiles.column(spark, $"value", 100,
+      bigEv.agg(functions.TDigestQuantiles.column($"value", 100,
         Seq(0.5, 0.95, 0.99)))
         .write.format("noop").mode("overwrite").save()
     }

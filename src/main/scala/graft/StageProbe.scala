@@ -61,17 +61,12 @@ object StageProbe {
     val name = args(0)
     val dir = args(1)
     val partitions = if (args.length > 2) args(2).toInt else 32
-    val spark = Sessions.tuned(
-      org.apache.spark.sql.SparkSession.builder()
-        .master("local[32]").appName("stage-probe"), partitions)
-      // match KneeProbe's cleaning cadence (see the note there) so
-      // breakdowns measure what the knee gates
-      .config("spark.cleaner.periodicGC.interval",
-        sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "60s"))
-      .getOrCreate()
-    if (spark.sparkContext.getCheckpointDir.isEmpty)
-      spark.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
+    val spark = Sessions.start(
+      Sessions.builder(32, "stage-probe", partitions)
+        // match KneeProbe's cleaning cadence (see the note there) so
+        // breakdowns measure what the knee gates
+        .config("spark.cleaner.periodicGC.interval",
+          sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "60s")))
     spark.sparkContext.setLogLevel("ERROR")
     val log = new StageLog
     spark.sparkContext.addSparkListener(log)

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,15 +6,8 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Sessions.local(cpus.toInt, "verify")
     spark.sparkContext.setLogLevel("WARN")
-    spark.sparkContext.setCheckpointDir(
-      Files.createTempDirectory("graft_ckpt").toString)
     new java.io.File(outDir).mkdirs()
     // Optional full-match regex filter for local iteration (the driver
     // sets no filter); the oracle json below is filtered to match so

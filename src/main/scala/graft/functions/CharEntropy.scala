@@ -1,9 +1,9 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftAccess.{column => toColumn, expression}
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -77,12 +77,5 @@ case class CharEntropy(child: Expression) extends UnaryExpression {
 
 object CharEntropyFn {
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "char_entropy", exprs => CharEntropy(exprs.head), "built-in")
-
-  def column(spark: SparkSession, c: Column): Column = {
-    register(spark)
-    call_function("char_entropy", c)
-  }
+  def column(c: Column): Column = toColumn(CharEntropy(expression(c)))
 }

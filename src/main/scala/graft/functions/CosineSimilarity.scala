@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftAccess.{column => toColumn, expression}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, DoubleType}
 
 /** Native codegen'd cosine similarity over two vector-array columns
@@ -85,16 +85,6 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
 object CosineSimilarity {
 
-  /** Register `cosine_sim` on the session (idempotent), usable from both
-    * the Column API (via [[column]]) and SQL text.
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cosine_sim", exprs => CosineSimilarity(exprs.head, exprs(1)),
-      "built-in")
-
-  def column(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("cosine_sim", a, b)
-  }
+  def column(a: Column, b: Column): Column =
+    toColumn(CosineSimilarity(expression(a), expression(b)))
 }

@@ -4,12 +4,12 @@ import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets
 import java.security.MessageDigest
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftAccess.{column => toColumn, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -118,21 +118,9 @@ object CmSketch {
     (u % width).toInt
   }
 
-  /** Register `cm_sketch(col, depth, width)` on the session
-    * (idempotent). Returns the flattened row-major depth×width grid.
+  /** `cm_sketch(col, depth, width)`: the flattened row-major
+    * depth×width grid.
     */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "cm_sketch",
-      exprs => CmSketch(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue(),
-        exprs(2).eval(null).asInstanceOf[Number].intValue()),
-      "built-in")
-
-  def column(spark: SparkSession, c: Column, depth: Int, width: Int): Column = {
-    register(spark)
-    call_function("cm_sketch", c,
-      org.apache.spark.sql.functions.lit(depth),
-      org.apache.spark.sql.functions.lit(width))
-  }
+  def column(c: Column, depth: Int, width: Int): Column =
+    toColumn(CmSketch(expression(c), depth, width).toAggregateExpression())
 }

@@ -52,9 +52,10 @@ object Dictionaries {
   val DefaultMaxEntries: Int = 2000000
 
   /** Load `dim` (key column + attribute columns) as dictionary `name`
-    * and register the `dict_get`/`dict_get_or_default` SQL functions on
-    * `spark`. Duplicate keys fail loudly (CH hashed layout requires
-    * unique keys); so does exceeding `maxEntries`.
+    * for the `dict_get`/`dict_get_or_default` SQL functions (registered
+    * in every session by [[graft.GraftExtensions]]). Duplicate keys fail
+    * loudly (CH hashed layout requires unique keys); so does exceeding
+    * `maxEntries`.
     */
   def create(spark: SparkSession, name: String, dim: DataFrame,
              keyCol: String, maxEntries: Int = DefaultMaxEntries): Unit = {
@@ -93,7 +94,6 @@ object Dictionaries {
     // reclaims the driver copy once the last plan reference is gone
     Option(registry.put(name, Dict(keyType, attrs, bc)))
       .foreach(_.bc.unpersist(blocking = false))
-    register(spark)
   }
 
   def drop(name: String): Unit =
@@ -138,14 +138,6 @@ object Dictionaries {
     require(exprs.length == 4,
       "dict_get_or_default('dict', 'attr', key, default)")
     Coalesce(Seq(buildDictGet(exprs.take(3)), exprs(3)))
-  }
-
-  /** Register the SQL functions on a session (idempotent). */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dict_get", buildDictGet, "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dict_get_or_default", buildDictGetOrDefault, "built-in")
   }
 }
 

@@ -2,12 +2,14 @@ package graft.functions
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, DataOutputStream}
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftAccess.{column => toColumn, expression}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -101,8 +103,11 @@ case class MisraGries(child: Expression, k: Int,
     extends TypedImperativeAggregate[java.util.HashMap[String, Long]] {
 
   require(k >= 1, s"k >= 1 required, got $k")
-  require(child.dataType == StringType,
-    s"misra_gries expects a string column, got ${child.dataType}")
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == StringType) TypeCheckSuccess
+    else TypeCheckFailure(
+      s"misra_gries expects a string column, got ${child.dataType}")
 
   override def createAggregationBuffer(): java.util.HashMap[String, Long] =
     new java.util.HashMap[String, Long]()
@@ -205,18 +210,8 @@ case class MisraGries(child: Expression, k: Int,
 
 object MisraGries {
 
-  /** Register `misra_gries(col, k)` on the session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "misra_gries",
-      exprs => MisraGries(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue()),
-      "built-in")
-
-  def column(spark: SparkSession, c: Column, k: Int): Column = {
-    register(spark)
-    call_function("misra_gries", c, org.apache.spark.sql.functions.lit(k))
-  }
+  def column(c: Column, k: Int): Column =
+    toColumn(MisraGries(expression(c), k).toAggregateExpression())
 }
 
 /** ClickHouse `topKWeighted(k)(item, w)`'s sketch: WEIGHTED
@@ -243,10 +238,13 @@ case class MisraGriesWeighted(child: Expression, weight: Expression, k: Int,
     extends TypedImperativeAggregate[java.util.HashMap[String, Long]] {
 
   require(k >= 1, s"k >= 1 required, got $k")
-  require(child.dataType == StringType,
-    s"misra_gries_w expects a string item column, got ${child.dataType}")
-  require(weight.dataType == LongType,
-    s"misra_gries_w expects a BIGINT weight column, got ${weight.dataType}")
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType != StringType) TypeCheckFailure(
+      s"misra_gries_w expects a string item column, got ${child.dataType}")
+    else if (weight.dataType != LongType) TypeCheckFailure(
+      s"misra_gries_w expects a BIGINT weight column, got ${weight.dataType}")
+    else TypeCheckSuccess
 
   override def createAggregationBuffer(): java.util.HashMap[String, Long] =
     new java.util.HashMap[String, Long]()
@@ -353,17 +351,7 @@ case class MisraGriesWeighted(child: Expression, weight: Expression, k: Int,
 
 object MisraGriesWeighted {
 
-  /** Register `misra_gries_w(col, w, k)` on the session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "misra_gries_w",
-      exprs => MisraGriesWeighted(exprs.head, exprs(1),
-        exprs(2).eval(null).asInstanceOf[Number].intValue()),
-      "built-in")
-
-  def column(spark: SparkSession, c: Column, w: Column, k: Int): Column = {
-    register(spark)
-    call_function("misra_gries_w", c, w,
-      org.apache.spark.sql.functions.lit(k))
-  }
+  def column(c: Column, w: Column, k: Int): Column =
+    toColumn(MisraGriesWeighted(expression(c), expression(w), k)
+      .toAggregateExpression())
 }

@@ -2,12 +2,12 @@ package graft.functions
 
 import java.nio.ByteBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftAccess.{column => toColumn, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.expressions.XxHash64Function
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** K-Minimum-Values distinct-count sketch as a custom
@@ -100,16 +100,6 @@ case class KmvDistinct(child: Expression, k: Int,
 
 object KmvDistinct {
 
-  /** Register `kmv_distinct(col, k)` on the session (idempotent). */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "kmv_distinct",
-      exprs => KmvDistinct(exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue()),
-      "built-in")
-
-  def column(spark: SparkSession, c: Column, k: Int): Column = {
-    register(spark)
-    call_function("kmv_distinct", c, org.apache.spark.sql.functions.lit(k))
-  }
+  def column(c: Column, k: Int): Column =
+    toColumn(KmvDistinct(expression(c), k).toAggregateExpression())
 }

@@ -2,11 +2,11 @@ package graft.functions
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftAccess.{column => toColumn, expression}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -145,14 +145,8 @@ case class PhraseHits(left: Expression, right: Expression)
 
 object PhraseHits {
 
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "phrase_hits", exprs => PhraseHits(exprs.head, exprs(1)), "built-in")
-
-  def column(spark: SparkSession, text: Column, phrases: Seq[String]): Column = {
-    register(spark)
-    call_function("phrase_hits", text,
+  def column(text: Column, phrases: Seq[String]): Column =
+    toColumn(PhraseHits(expression(text), expression(
       org.apache.spark.sql.functions.array(
-        phrases.map(org.apache.spark.sql.functions.lit): _*))
-  }
+        phrases.map(org.apache.spark.sql.functions.lit): _*))))
 }

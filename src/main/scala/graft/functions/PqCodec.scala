@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftAccess.{column => toColumn, expression}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Product-quantization codec expressions: the PQ codebooks ride the
@@ -187,33 +187,12 @@ object PqCodec {
   private[graft] def flat(books: Seq[Seq[Seq[Float]]]): Array[Float] =
     books.flatMap(_.flatten).toArray
 
-  /** Content-derived registry suffix: re-registering the same books
-    * under the same name is idempotent, and DIFFERENT books never
-    * clobber each other's registration between Column construction
-    * and (eager) analysis.
-    */
-  private def sig(books: Seq[Seq[Seq[Float]]]): String =
-    (books.hashCode() & Int.MaxValue).toString
+  def adc(codes: Column, query: Column,
+          books: Seq[Seq[Seq[Float]]]): Column =
+    toColumn(PqAdcDistance(expression(codes), expression(query), flat(books),
+      books.size, books.head.size, books.head.head.size))
 
-  def adc(spark: SparkSession, codes: Column, query: Column,
-          books: Seq[Seq[Seq[Float]]]): Column = {
-    val (nsub, ksub, subDim) = (books.size, books.head.size, books.head.head.size)
-    val fb = flat(books)
-    val name = s"pq_adc_${sig(books)}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => PqAdcDistance(exprs.head, exprs(1), fb, nsub, ksub, subDim),
-      "built-in")
-    call_function(name, codes, query)
-  }
-
-  def encode(spark: SparkSession, vec: Column,
-             books: Seq[Seq[Seq[Float]]]): Column = {
-    val (nsub, ksub, subDim) = (books.size, books.head.size, books.head.head.size)
-    val fb = flat(books)
-    val name = s"pq_encode_${sig(books)}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => PqEncodeCodes(exprs.head, fb, nsub, ksub, subDim),
-      "built-in")
-    call_function(name, vec)
-  }
+  def encode(vec: Column, books: Seq[Seq[Seq[Float]]]): Column =
+    toColumn(PqEncodeCodes(expression(vec), flat(books),
+      books.size, books.head.size, books.head.head.size))
 }

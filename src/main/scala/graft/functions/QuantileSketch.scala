@@ -4,12 +4,14 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream, DataInputStream, Da
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftAccess.{column => toColumn, expression}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult.{TypeCheckFailure, TypeCheckSuccess}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
-import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
+import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 
 /** t-digest quantile sketch (Dunning & Ertl, "Computing extremely
@@ -45,8 +47,11 @@ case class TDigestQuantiles(child: Expression, compression: Int,
   require(compression >= 10, s"compression >= 10 required, got $compression")
   require(quantiles.nonEmpty && quantiles.forall(q => q >= 0 && q <= 1),
     s"quantiles must lie in [0,1], got $quantiles")
-  require(child.dataType == DoubleType,
-    s"tdigest expects a double column, got ${child.dataType}")
+
+  override def checkInputDataTypes(): TypeCheckResult =
+    if (child.dataType == DoubleType) TypeCheckSuccess
+    else TypeCheckFailure(
+      s"tdigest expects a double column, got ${child.dataType}")
 
   /** Slack factor: compress once the centroid list outgrows 8·δ. */
   private def cap: Int = compression * 8
@@ -178,24 +183,7 @@ object TDigestQuantiles {
     digest.last._1
   }
 
-  /** Register `tdigest_quantiles(col, compression, array(q...))` on the
-    * session (idempotent).
-    */
-  def register(spark: SparkSession): Unit =
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "tdigest_quantiles",
-      exprs => TDigestQuantiles(
-        exprs.head,
-        exprs(1).eval(null).asInstanceOf[Number].intValue(),
-        exprs(2).eval(null).asInstanceOf[ArrayData].toDoubleArray().toSeq),
-      "built-in")
-
-  def column(spark: SparkSession, c: Column, compression: Int,
-             qs: Seq[Double]): Column = {
-    register(spark)
-    call_function("tdigest_quantiles", c.cast("double"),
-      org.apache.spark.sql.functions.lit(compression),
-      org.apache.spark.sql.functions.array(
-        qs.map(org.apache.spark.sql.functions.lit): _*))
-  }
+  def column(c: Column, compression: Int, qs: Seq[Double]): Column =
+    toColumn(TDigestQuantiles(expression(c.cast("double")), compression, qs)
+      .toAggregateExpression())
 }

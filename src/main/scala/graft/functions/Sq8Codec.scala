@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftAccess.{column => toColumn, expression}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType}
 
 /** Scalar-quantization (SQ8) codec expressions: each dimension is
@@ -145,27 +145,11 @@ case class Sq8AdcDistance(left: Expression, right: Expression,
 
 object Sq8Codec {
 
-  /** Content-derived registry suffix — same idempotence/no-clobber
-    * discipline as [[PqCodec]].
-    */
-  private def sig(mins: Array[Double], deltas: Array[Double]): String =
-    ((java.util.Arrays.hashCode(mins) * 31 +
-      java.util.Arrays.hashCode(deltas)) & Int.MaxValue).toString
+  def encode(vec: Column, mins: Array[Double],
+             deltas: Array[Double]): Column =
+    toColumn(Sq8EncodeCodes(expression(vec), mins, deltas))
 
-  def encode(spark: SparkSession, vec: Column, mins: Array[Double],
-             deltas: Array[Double]): Column = {
-    val name = s"sq8_encode_${sig(mins, deltas)}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => Sq8EncodeCodes(exprs.head, mins, deltas), "built-in")
-    call_function(name, vec)
-  }
-
-  def adc(spark: SparkSession, codes: Column, query: Column,
-          mins: Array[Double], deltas: Array[Double]): Column = {
-    val name = s"sq8_adc_${sig(mins, deltas)}"
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      name, exprs => Sq8AdcDistance(exprs.head, exprs(1), mins, deltas),
-      "built-in")
-    call_function(name, codes, query)
-  }
+  def adc(codes: Column, query: Column,
+          mins: Array[Double], deltas: Array[Double]): Column =
+    toColumn(Sq8AdcDistance(expression(codes), expression(query), mins, deltas))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftAccess.{column => toColumn, expression}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** Element accessor selection for the fused vector expressions: the
@@ -237,38 +237,14 @@ case class HammingCodeDistance(left: Expression, right: Expression)
 
 object VectorExprs {
 
-  /** Register the primitives on the session (idempotent); usable from
-    * SQL text and, via the column helpers, the DataFrame API.
-    */
-  def register(spark: SparkSession): Unit = {
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "dot_f", exprs => DotProduct(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "l2_dist_sq", exprs => L2DistanceSq(exprs.head, exprs(1)), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "sign_pack", exprs => SignPack(exprs.head), "built-in")
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "hamming_codes",
-      exprs => HammingCodeDistance(exprs.head, exprs(1)), "built-in")
-  }
+  def dot(a: Column, b: Column): Column =
+    toColumn(DotProduct(expression(a), expression(b)))
 
-  def dot(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("dot_f", a, b)
-  }
+  def l2DistSq(a: Column, b: Column): Column =
+    toColumn(L2DistanceSq(expression(a), expression(b)))
 
-  def l2DistSq(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("l2_dist_sq", a, b)
-  }
+  def signPack(v: Column): Column = toColumn(SignPack(expression(v)))
 
-  def signPack(spark: SparkSession, v: Column): Column = {
-    register(spark)
-    call_function("sign_pack", v)
-  }
-
-  def hammingCodes(spark: SparkSession, a: Column, b: Column): Column = {
-    register(spark)
-    call_function("hamming_codes", a, b)
-  }
+  def hammingCodes(a: Column, b: Column): Column =
+    toColumn(HammingCodeDistance(expression(a), expression(b)))
 }

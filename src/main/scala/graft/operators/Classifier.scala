@@ -42,9 +42,8 @@ object Classifier {
     * single-fold dot — the cross-engine-exact spelling shared with
     * [[Pca.project]]).
     */
-  def logitCol(feats: DataFrame, vecCol: String, m: LogRegModel): Column =
-    lit(m.bias) + VectorExprs.dot(feats.sparkSession, col(vecCol),
-      typedLit(m.weights))
+  def logitCol(vecCol: String, m: LogRegModel): Column =
+    lit(m.bias) + VectorExprs.dot(col(vecCol), typedLit(m.weights))
 
   /** Score every row: (idCol, logit, pred) with the logit rounded at
     * `scale` and the boolean verdict taken on the ROUNDED value, so
@@ -52,7 +51,7 @@ object Classifier {
     */
   def score(feats: DataFrame, idCol: String, vecCol: String,
             m: LogRegModel, scale: Int = 6): DataFrame = {
-    val lg = Rounding.pround(logitCol(feats, vecCol, m), scale)
+    val lg = Rounding.pround(logitCol(vecCol, m), scale)
     feats.select(col(idCol), lg.as("logit"), (lg > 0).as("pred"))
   }
 
@@ -74,7 +73,6 @@ object Classifier {
             step: Double = 1.0, l2: Double = 1e-4,
             maxTrain: Int = 1 << 16): LogRegModel = {
     require(dim >= 1 && iters >= 1 && step > 0 && l2 >= 0)
-    val spark = feats.sparkSession
     val f = feats
       .select(col(idCol), col(vecCol).as("x"),
         col(labelCol).cast("double").as("y"))
@@ -92,7 +90,7 @@ object Classifier {
           sum(col("r")).as("gb")
       for (_ <- 0 until iters) {
         val margin = lit(b) +
-          VectorExprs.dot(spark, col("x"), typedLit(w.toSeq))
+          VectorExprs.dot(col("x"), typedLit(w.toSeq))
         val resid = lit(1.0) / (lit(1.0) + exp(-margin)) - col("y")
         val row = f.withColumn("r", resid)
           .agg(gradAggs.head, gradAggs.tail: _*).head()
@@ -113,7 +111,7 @@ object Classifier {
     */
   def logLoss(feats: DataFrame, vecCol: String, labelCol: String,
               m: LogRegModel): Double = {
-    val p0 = lit(1.0) / (lit(1.0) + exp(-logitCol(feats, vecCol, m)))
+    val p0 = lit(1.0) / (lit(1.0) + exp(-logitCol(vecCol, m)))
     val p = least(greatest(p0, lit(1e-12)), lit(1.0 - 1e-12))
     val y = col(labelCol).cast("double")
     feats.agg(avg(-(y * log(p) + (lit(1.0) - y) * log(lit(1.0) - p))))

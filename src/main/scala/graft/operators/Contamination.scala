@@ -164,14 +164,13 @@ object Contamination {
   def semanticOverlap(train: DataFrame, eval: DataFrame, idCol: String,
                       vecCol: String, bits: Int,
                       minCosine: Double): DataFrame = {
-    val spark = train.sparkSession
     val tr = train.select(col(idCol).as("train_id"), col(vecCol).as("cv"),
       Similarity.signBucket(col(vecCol), bits).as("bucket"))
     val ev = eval.select(col(idCol).as("eval_id"), col(vecCol).as("qv"),
       Similarity.signBucket(col(vecCol), bits).as("bucket"))
     tr.join(broadcast(ev), Seq("bucket"))
       .withColumn("score",
-        Similarity.cosineFused(spark, col("qv"), col("cv")))
+        Similarity.cosineFused(col("qv"), col("cv")))
       .filter(col("score") >= minCosine)
       .select("train_id", "eval_id", "score")
   }

@@ -91,7 +91,7 @@ object Graph {
                      knn: Option[DataFrame] = None): DataFrame = {
     val directed = knn.getOrElse(
       Similarity.bruteForceTopK(vectors, vectors, idCol, vecCol, k,
-        Similarity.cosineFused(vectors.sparkSession, _, _)))
+        Similarity.cosineFused(_, _)))
       .select(col("query_id"), col("cand_id"))
     val rev = directed.select(col("cand_id").as("query_id"),
       col("query_id").as("cand_id"))
@@ -237,13 +237,12 @@ object Graph {
     * means, own vs min-foreign, (b−a)/max(a,b) with pround(6).
     */
   private def silhouetteScores(all: DataFrame, bSide: DataFrame): DataFrame = {
-    val spark = all.sparkSession
     val a = all.select(col("id").as("ida"), col("cluster_id").as("ca"),
       col("v").as("va"))
     val b = bSide.select(col("id").as("idb"), col("cluster_id").as("cb"),
       col("v").as("vb"))
     val d6 = floor((lit(1.0) -
-      Similarity.cosineFused(spark, col("va"), col("vb"))) * lit(1.0e6)
+      Similarity.cosineFused(col("va"), col("vb"))) * lit(1.0e6)
       + lit(0.5))
     val means = a.crossJoin(broadcast(b))
       .filter(col("ida") =!= col("idb"))

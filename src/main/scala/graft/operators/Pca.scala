@@ -312,10 +312,9 @@ object Pca {
   def project(df: DataFrame, idCol: String, vecCol: String,
               loadings: Seq[Seq[Double]], scale: Int = 6): DataFrame = {
     require(loadings.nonEmpty, "at least one loading row required")
-    val spark = df.sparkSession
     val comps: Seq[Column] = loadings.map { l =>
       Rounding.pround(
-        graft.functions.VectorExprs.dot(spark, col(vecCol),
+        graft.functions.VectorExprs.dot(col(vecCol),
           typedLit(l.toArray)), scale)
     }
     df.select(col(idCol), array(comps: _*).as("vec"))

@@ -45,8 +45,8 @@ object Quality {
     val c = col(textCol)
     val blockedSig =
       if (t.blockedPhrases.isEmpty) Nil
-      else Seq(size(graft.functions.PhraseHits.column(
-        docs.sparkSession, c, t.blockedPhrases)).as("n_blocked"))
+      else Seq(size(graft.functions.PhraseHits.column(c, t.blockedPhrases))
+        .as("n_blocked"))
     val sig = docs.select(Seq(col(idCol),
       TextFunctions.tokenCount(c).as("n_tokens"),
       TextFunctions.langId(c).as("lang_id"),
@@ -79,8 +79,7 @@ object Quality {
     val c = col(textCol)
     val blockOk =
       if (t.blockedPhrases.isEmpty) lit(true)
-      else size(graft.functions.PhraseHits.column(
-        docs.sparkSession, c, t.blockedPhrases)) === 0
+      else size(graft.functions.PhraseHits.column(c, t.blockedPhrases)) === 0
     docs.filter(
       c.isNotNull &&
         TextFunctions.tokenCount(c).between(t.minTokens, t.maxTokens) &&

@@ -69,10 +69,8 @@ object Similarity {
     * of interpreting three HOF folds per row, so every internal hot
     * path scores with THIS form.
     */
-  def cosineFused(spark: SparkSession, a: Column, b: Column,
-                  scale: Int = 6): Column =
-    Rounding.pround(graft.functions.CosineSimilarity.column(spark, a, b),
-      scale)
+  def cosineFused(a: Column, b: Column, scale: Int = 6): Column =
+    Rounding.pround(graft.functions.CosineSimilarity.column(a, b), scale)
 
   /** Sign-pattern bucket over the first `bits` dimensions — a
     * deterministic LSH family (hyperplanes = coordinate axes). Vectors in
@@ -294,7 +292,7 @@ object Similarity {
     val spark = corpus.sparkSession
     val pts = corpus.select(col(idCol).as("id"), col(vecCol).as("v"))
     val dist = (a: Column, b: Column) => Rounding.pround(
-      graft.functions.VectorExprs.l2DistSq(spark, a, b), 6)
+      graft.functions.VectorExprs.l2DistSq(a, b), 6)
     val seedRow = pts.orderBy("id").limit(1).collect().headOption
       .getOrElse(throw new IllegalArgumentException(
         "kCenterCoreset: empty corpus"))
@@ -350,7 +348,7 @@ object Similarity {
     val scored = c.join(broadcast(q), Seq("bucket"))
       .filter(col("cand_id") =!= col("query_id"))
       .withColumn("score",
-        cosineFused(corpus.sparkSession, col("qv"), col("cv")))
+        cosineFused(col("qv"), col("cv")))
       .select("query_id", "cand_id", "score")
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("query_id")
@@ -441,9 +439,8 @@ object Similarity {
     */
   private[graft] def withCellDist(centDf: DataFrame)(df: DataFrame,
                                               vec: String): DataFrame = {
-    val spark = df.sparkSession
     val dotN = (a: Column, b: Column) =>
-      graft.functions.VectorExprs.dot(spark, a, b)
+      graft.functions.VectorExprs.dot(a, b)
     df.crossJoin(broadcast(centDf))
       .withColumn("cdist", dotN(col(vec), col("centroid")) * -2 +
         dotN(col("centroid"), col("centroid")))
@@ -502,7 +499,7 @@ object Similarity {
     val scored = corpusCells.join(broadcast(queryCells), Seq("cell"))
       .filter(col("cand_id") =!= col("query_id"))
       .withColumn("score",
-        cosineFused(corpus.sparkSession, col("qv"), col("cv")))
+        cosineFused(col("qv"), col("cv")))
       .select("query_id", "cand_id", "score")
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy("query_id")
@@ -538,7 +535,7 @@ object Similarity {
   def pqEncode(corpus: DataFrame, idCol: String, vecCol: String,
                codebooks: Seq[Seq[Seq[Float]]]): DataFrame =
     corpus.select(col(idCol).as("cand_id"),
-      graft.functions.PqCodec.encode(corpus.sparkSession, col(vecCol),
+      graft.functions.PqCodec.encode(col(vecCol),
         codebooks).as("codes"))
 
   /** Train `nsub` sub-quantizers of `ksub` centroids each. The training
@@ -595,8 +592,7 @@ object Similarity {
              vecCol: String, k: Int,
              codebooks: Seq[Seq[Seq[Float]]]): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val dist = graft.functions.PqCodec.adc(encoded.sparkSession,
-      col("codes"), col("qv"), codebooks)
+    val dist = graft.functions.PqCodec.adc(col("codes"), col("qv"), codebooks)
     val scored = encoded.crossJoin(broadcast(q))
       .filter(col("cand_id") =!= col("query_id"))
       .withColumn("approx_dist", Rounding.pround(dist, 6))
@@ -641,7 +637,6 @@ object Similarity {
                 maxTrain: Int = 1 << 16): DataFrame = {
     val centDf = coarseCentroids(trainView(corpus, idCol, maxTrain),
       vecCol, nlist, seed)
-    val spark = corpus.sparkSession
     val cells = corpusCellAssignment(corpus, idCol, vecCol, centDf)
     // codes projected in place on the assignment/residual frame (same
     // rows as the old separate pqEncode + cand_id join — see
@@ -658,13 +653,13 @@ object Similarity {
         val b = pqTrain(trainView(res, "cand_id", maxTrain), "rv",
           nsub, ksub, seed)
         (b, res.select(col("cell"), col("cand_id"),
-          graft.functions.PqCodec.encode(spark, col("rv"), b).as("codes"),
+          graft.functions.PqCodec.encode(col("rv"), b).as("codes"),
           col("cv")))
       } else {
         val b = pqTrain(trainView(corpus, idCol, maxTrain), vecCol,
           nsub, ksub, seed)
         (b, cells.select(col("cell"), col("cand_id"),
-          graft.functions.PqCodec.encode(spark, col("cv"), b).as("codes"),
+          graft.functions.PqCodec.encode(col("cv"), b).as("codes"),
           col("cv")))
       }
     val probes = queryCellProbe(queries, idCol, vecCol, centDf, nprobe)
@@ -699,7 +694,6 @@ object Similarity {
                                  residualCentroids: Option[DataFrame],
                                  vectors: DataFrame)
       : DataFrame = {
-    val spark = indexed.sparkSession
     val (probeSide, adcQueryVec) = residualCentroids match {
       case Some(centDf) =>
         (probes.join(broadcast(centDf), Seq("cell"))
@@ -712,8 +706,7 @@ object Similarity {
     // codebooks as a float[] reference (constant-size generated code at
     // any nsub/ksub — the typedLit spelling blew the 64 KB method limit
     // and fell back to interpreted), the exact re-rank is the fused L2
-    val adc = graft.functions.PqCodec.adc(spark,
-      col("codes"), col(adcQueryVec), books)
+    val adc = graft.functions.PqCodec.adc(col("codes"), col(adcQueryVec), books)
     import org.apache.spark.sql.expressions.Window
     val wAdc = Window.partitionBy("query_id")
       .orderBy(col("adc_dist"), col("cand_id"))
@@ -726,8 +719,7 @@ object Similarity {
       .select("query_id", "cand_id")
     val qvs = probes.select(col("query_id"), col("qv"))
       .dropDuplicates("query_id")
-    val exactDist = graft.functions.VectorExprs.l2DistSq(spark,
-      col("qv"), col("cv"))
+    val exactDist = graft.functions.VectorExprs.l2DistSq(col("qv"), col("cv"))
     val wExact = Window.partitionBy("query_id")
       .orderBy(col("dist"), col("cand_id"))
     vectors.join(broadcast(shortIds), Seq("cand_id"))
@@ -786,7 +778,7 @@ object Similarity {
         val b = pqTrain(trainView(res, "cand_id", maxTrain), "rv",
           nsub, ksub, seed)
         (b, res.select(col("cell"), col("cand_id"),
-          graft.functions.PqCodec.encode(spark, col("rv"), b).as("codes"),
+          graft.functions.PqCodec.encode(col("rv"), b).as("codes"),
           col("cv")), Some(res))
       } else {
         val b = pqTrain(trainView(corpus, idCol, maxTrain), vecCol,
@@ -794,7 +786,7 @@ object Similarity {
         // cells.cv IS the corpus vector, so encode(cv) ≡ the old
         // pqEncode over the raw corpus for the same cand_id
         (b, cells.select(col("cell"), col("cand_id"),
-          graft.functions.PqCodec.encode(spark, col("cv"), b).as("codes"),
+          graft.functions.PqCodec.encode(col("cv"), b).as("codes"),
           col("cv")), None)
       }
     graft.sources.IO.writeBucketedTable(indexed, table, "cell", buckets)
@@ -939,17 +931,16 @@ object Similarity {
                                     vecCol: String, centDf: DataFrame,
                                     books: Seq[Seq[Seq[Float]]],
                                     residual: Boolean): DataFrame = {
-    val spark = rows.sparkSession
     val cells = corpusCellAssignment(rows, idCol, vecCol, centDf)
     // codes projected in place on the assignment/residual frame (see
     // writeVectorIndex): identical rows, no re-assignment, no join
     if (residual)
       withResiduals(cells, centDf).select(col("cell"), col("cand_id"),
-        graft.functions.PqCodec.encode(spark, col("rv"), books).as("codes"),
+        graft.functions.PqCodec.encode(col("rv"), books).as("codes"),
         col("cv"))
     else
       cells.select(col("cell"), col("cand_id"),
-        graft.functions.PqCodec.encode(spark, col("cv"), books).as("codes"),
+        graft.functions.PqCodec.encode(col("cv"), books).as("codes"),
         col("cv"))
   }
 
@@ -1011,8 +1002,7 @@ object Similarity {
       codebooks).select("query_id", "cand_id")
     val cv = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"))
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val exactDist = graft.functions.VectorExprs.l2DistSq(corpus.sparkSession,
-      col("qv"), col("cv"))
+    val exactDist = graft.functions.VectorExprs.l2DistSq(col("qv"), col("cv"))
     val scored = cv.join(broadcast(shortlist), Seq("cand_id"))
       .join(broadcast(q), Seq("query_id"))
       .withColumn("dist", Rounding.pround(exactDist, 6))
@@ -1051,7 +1041,7 @@ object Similarity {
   def sq8Encode(corpus: DataFrame, idCol: String, vecCol: String,
                 mins: Array[Double], deltas: Array[Double]): DataFrame =
     corpus.select(col(idCol).as("cand_id"),
-      graft.functions.Sq8Codec.encode(corpus.sparkSession, col(vecCol),
+      graft.functions.Sq8Codec.encode(col(vecCol),
         mins, deltas).as("codes"))
 
   /** SQ8 ANN: train (min/max scan) → encode (map pass) → ADC scan of
@@ -1068,11 +1058,10 @@ object Similarity {
     */
   def sq8TopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, k: Int, overquery: Int = 5): DataFrame = {
-    val spark = corpus.sparkSession
     val (mins, deltas) = sq8Stats(corpus, vecCol)
     val encoded = sq8Encode(corpus, idCol, vecCol, mins, deltas)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
-    val adc = graft.functions.Sq8Codec.adc(spark, col("codes"), col("qv"),
+    val adc = graft.functions.Sq8Codec.adc(col("codes"), col("qv"),
       mins, deltas)
     import org.apache.spark.sql.expressions.Window
     val wAdc = Window.partitionBy("query_id")
@@ -1085,8 +1074,7 @@ object Similarity {
       .filter(col("r") <= k * overquery)
       .select("query_id", "cand_id")
     val cv = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"))
-    val exactDist = graft.functions.VectorExprs.l2DistSq(spark,
-      col("qv"), col("cv"))
+    val exactDist = graft.functions.VectorExprs.l2DistSq(col("qv"), col("cv"))
     val wK = Window.partitionBy("query_id").orderBy(col("dist"), col("cand_id"))
     cv.join(broadcast(shortlist), Seq("cand_id"))
       .join(broadcast(q), Seq("query_id"))
@@ -1116,10 +1104,10 @@ object Similarity {
       .toDF("cell", "centroid")
     val (mins, deltas) = sq8Stats(corpus, vecCol)
     val encoded = corpusCellAssignment(corpus, idCol, vecCol, centDf)
-      .withColumn("codes", graft.functions.Sq8Codec.encode(spark,
-        col("cv"), mins, deltas))
+      .withColumn("codes",
+        graft.functions.Sq8Codec.encode(col("cv"), mins, deltas))
     val probes = queryCellProbe(queries, idCol, vecCol, centDf, nprobe)
-    val adc = graft.functions.Sq8Codec.adc(spark, col("codes"), col("qv"),
+    val adc = graft.functions.Sq8Codec.adc(col("codes"), col("qv"),
       mins, deltas)
     import org.apache.spark.sql.expressions.Window
     val wAdc = Window.partitionBy("query_id")
@@ -1137,8 +1125,7 @@ object Similarity {
       .select("query_id", "cand_id")
     val qvs = probes.select(col("query_id"), col("qv"))
       .dropDuplicates("query_id")
-    val exactDist = graft.functions.VectorExprs.l2DistSq(spark,
-      col("qv"), col("cv"))
+    val exactDist = graft.functions.VectorExprs.l2DistSq(col("qv"), col("cv"))
     val wK = Window.partitionBy("query_id").orderBy(col("dist"), col("cand_id"))
     corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"))
       .join(broadcast(shortIds), Seq("cand_id"))
@@ -1164,12 +1151,11 @@ object Similarity {
                           idCol: String, vecCol: String, k: Int,
                           dPrefix: Int, overquery: Int = 5): DataFrame = {
     require(dPrefix >= 1, s"dPrefix >= 1 required: $dPrefix")
-    val spark = corpus.sparkSession
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     // fanOut: stage-1 prefix-distance scan runs at scan parallelism
     val c = Par.fanOut(
       corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv")))
-    val approx = graft.functions.VectorExprs.l2DistSq(spark,
+    val approx = graft.functions.VectorExprs.l2DistSq(
       slice(col("qv"), 1, dPrefix), slice(col("cv"), 1, dPrefix))
     import org.apache.spark.sql.expressions.Window
     val wA = Window.partitionBy("query_id")
@@ -1181,8 +1167,7 @@ object Similarity {
       .withColumn("r", row_number().over(wA))
       .filter(col("r") <= k * overquery)
       .select("query_id", "cand_id")
-    val exact = graft.functions.VectorExprs.l2DistSq(spark,
-      col("qv"), col("cv"))
+    val exact = graft.functions.VectorExprs.l2DistSq(col("qv"), col("cv"))
     val wK = Window.partitionBy("query_id")
       .orderBy(col("dist"), col("cand_id"))
     c.join(broadcast(shortIds), Seq("cand_id"))
@@ -1219,16 +1204,14 @@ object Similarity {
                    signs: Seq[Seq[Double]], overquery: Int = 5): DataFrame = {
     require(signs.nonEmpty, "at least one projection row required")
     require(k >= 1, s"k >= 1 required: $k")
-    val spark = corpus.sparkSession
     def proj(v: Column): Column = array(signs.map { row =>
-      graft.functions.VectorExprs.dot(spark, v, typedLit(row.toArray))
+      graft.functions.VectorExprs.dot(v, typedLit(row.toArray))
     }: _*)
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
       proj(col(vecCol)).as("qp"))
     val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"),
       proj(col(vecCol)).as("cp"))
-    val approx = graft.functions.VectorExprs.l2DistSq(spark,
-      col("qp"), col("cp"))
+    val approx = graft.functions.VectorExprs.l2DistSq(col("qp"), col("cp"))
     import org.apache.spark.sql.expressions.Window
     val wA = Window.partitionBy("query_id")
       .orderBy(col("approx_dist"), col("cand_id"))
@@ -1239,8 +1222,7 @@ object Similarity {
       .withColumn("r", row_number().over(wA))
       .filter(col("r") <= k * overquery)
       .select("query_id", "cand_id")
-    val exact = graft.functions.VectorExprs.l2DistSq(spark,
-      col("qv"), col("cv"))
+    val exact = graft.functions.VectorExprs.l2DistSq(col("qv"), col("cv"))
     val wK = Window.partitionBy("query_id")
       .orderBy(col("dist"), col("cand_id"))
     c.join(broadcast(shortIds), Seq("cand_id"))
@@ -1279,19 +1261,18 @@ object Similarity {
                         overquery: Int = 5): DataFrame = {
     require(k >= 1, s"k >= 1 required: $k")
     require(overquery >= 1, s"overquery >= 1 required: $overquery")
-    val spark = corpus.sparkSession
     import graft.functions.VectorExprs
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
-      VectorExprs.signPack(spark, col(vecCol)).as("qcodes"))
+      VectorExprs.signPack(col(vecCol)).as("qcodes"))
     val c = corpus.select(col(idCol).as("cand_id"), col(vecCol).as("cv"),
-      VectorExprs.signPack(spark, col(vecCol)).as("ccodes"))
+      VectorExprs.signPack(col(vecCol)).as("ccodes"))
     import org.apache.spark.sql.expressions.Window
     val wH = Window.partitionBy("query_id")
       .orderBy(col("hamming"), col("cand_id"))
     val shortIds = c.crossJoin(broadcast(q))
       .filter(col("cand_id") =!= col("query_id"))
       .withColumn("hamming",
-        VectorExprs.hammingCodes(spark, col("qcodes"), col("ccodes")))
+        VectorExprs.hammingCodes(col("qcodes"), col("ccodes")))
       .select("query_id", "cand_id", "hamming")
       .withColumn("r", row_number().over(wH))
       .filter(col("r") <= k * overquery)
@@ -1300,7 +1281,7 @@ object Similarity {
       .orderBy(col("score").desc, col("cand_id"))
     c.select("cand_id", "cv").join(broadcast(shortIds), Seq("cand_id"))
       .join(broadcast(q.select("query_id", "qv")), Seq("query_id"))
-      .withColumn("score", cosineFused(spark, col("qv"), col("cv")))
+      .withColumn("score", cosineFused(col("qv"), col("cv")))
       .withColumn("rank", row_number().over(wK).cast("long"))
       .filter(col("rank") <= k)
       .select("query_id", "cand_id", "score", "rank")
@@ -1319,7 +1300,7 @@ object Similarity {
     a.join(b, Seq("bucket"))
       .filter(col("id_a") < col("id_b"))
       .withColumn("score",
-        cosineFused(corpus.sparkSession, col("va"), col("vb")))
+        cosineFused(col("va"), col("vb")))
       .filter(col("score") >= minCosine)
       .select("id_a", "id_b", "score")
   }
@@ -1408,7 +1389,7 @@ object Similarity {
       centroids.zipWithIndex.map { case (c, i) => (i, c.toArray) })
       .toDF("cell", "centroid")
     val cosN = (x: Column, y: Column) => Rounding.pround(
-      graft.functions.CosineSimilarity.column(spark, x, y), 6)
+      graft.functions.CosineSimilarity.column(x, y), 6)
     val newCells = corpusCellAssignment(newBatch, idCol, vecCol, centDf)
       .persist()
     val keptCells = corpusCellAssignment(kept, idCol, vecCol, centDf)
@@ -1547,9 +1528,8 @@ object Similarity {
     require(keepFrac > 0 && keepFrac <= 1,
       s"keepFrac in (0,1]: $keepFrac")
     import org.apache.spark.sql.expressions.Window
-    val spark = corpus.sparkSession
     val cosN = (x: Column, y: Column) => Rounding.pround(
-      graft.functions.CosineSimilarity.column(spark, x, y), 6)
+      graft.functions.CosineSimilarity.column(x, y), 6)
     val sims = corpusCellAssignment(corpus, idCol, vecCol, centDf)
       .join(broadcast(centDf), Seq("cell"))
       .select(col("cand_id").as(idCol), col("cell"),
@@ -1587,9 +1567,8 @@ object Similarity {
       // is bit-equal to the HOF form after pround — proven by
       // ann_brute_topk_native sharing ann_brute_topk's oracle — and the
       // pair join is the hot path here
-      val spark = corpus.sparkSession
       val cosN = (x: Column, y: Column) => Rounding.pround(
-        graft.functions.CosineSimilarity.column(spark, x, y), 6)
+        graft.functions.CosineSimilarity.column(x, y), 6)
       val withSim = cells.join(broadcast(centDf), Seq("cell"))
         .withColumn("csim", cosN(col("cv"), col("centroid")))
         .drop("centroid")

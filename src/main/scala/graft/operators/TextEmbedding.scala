@@ -79,6 +79,6 @@ object TextEmbedding {
     // score with the fused codegen'd cosine (bit-identical to the HOF
     // form, one compiled loop instead of three interpreted folds)
     Similarity.bruteForceTopK(emb, emb.filter(queryPred), idCol, "vec", k,
-      Similarity.cosineFused(docs.sparkSession, _, _))
+      Similarity.cosineFused(_, _))
   }
 }

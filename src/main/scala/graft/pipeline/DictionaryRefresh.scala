@@ -62,7 +62,8 @@ object DictionaryRefresh {
 
   /** A refresh loop that serves BOTH consumer forms from one snapshot:
     * the returned loop's `get()` is the join-form dimension, and
-    * `dict_get('name', ...)` is re-registered on each reload.
+    * dictionary `name` that `dict_get('name', ...)` reads is re-published
+    * on each reload.
     */
   def asSqlDict(spark: SparkSession, name: String, keyCol: String,
                 load: () => DataFrame, ttlMillis: Long,

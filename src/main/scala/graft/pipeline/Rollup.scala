@@ -283,8 +283,8 @@ object Rollup {
   def aggregateTopKState(batch: DataFrame, keys: Seq[String],
                          itemCol: Column, k: Int): DataFrame =
     batch.groupBy(keys.map(col): _*)
-      .agg(graft.functions.MisraGriesWeighted.column(batch.sparkSession,
-        itemCol, lit(1L), k).as("topk_state"))
+      .agg(graft.functions.MisraGriesWeighted.column(itemCol, lit(1L), k)
+        .as("topk_state"))
 
   /** topK-state merge (`topKMerge`): explode the stored counter lists
     * and re-fold them through the WEIGHTED sketch — feeding a counter
@@ -307,7 +307,7 @@ object Rollup {
     all
       .select(keys.map(col) :+ explode(col("topk_state")).as("__e"): _*)
       .groupBy(keys.map(col): _*)
-      .agg(graft.functions.MisraGriesWeighted.column(all.sparkSession,
+      .agg(graft.functions.MisraGriesWeighted.column(
         col("__e.item"), col("__e.count"), k).as("topk_state"))
   }
 
@@ -340,8 +340,7 @@ object Rollup {
                        termCol: Column, depth: Int, width: Int)
       : DataFrame =
     batch.groupBy(keys.map(col): _*)
-      .agg(graft.functions.CmSketch.column(batch.sparkSession,
-        termCol, depth, width).as("cm"))
+      .agg(graft.functions.CmSketch.column(termCol, depth, width).as("cm"))
 
   /** CM-state merge: grids of the same geometry add cell-wise — the
     * unconditionally associative+commutative case of the family (no

@@ -407,7 +407,7 @@ object Extensions {
     // engines hash (zero-hit docs are absent from both).
     "text_blocklist" -> ((s, dir) =>
       t(s, dir, "documents").select(col("doc_id"),
-        explode(graft.functions.PhraseHits.column(s, col("text"),
+        explode(graft.functions.PhraseHits.column(col("text"),
           Blocklist)).as("term"))
         .orderBy("doc_id", "term")),
 
@@ -419,7 +419,7 @@ object Extensions {
     "sketch_cm_accuracy" -> ((s, dir) => {
       val toks = t(s, dir, "documents")
         .select(explode(TextFunctions.tokens(col("text"))).as("term"))
-      val sketch = toks.agg(graft.functions.CmSketch.column(s,
+      val sketch = toks.agg(graft.functions.CmSketch.column(
         col("term"), CmDepth, CmWidth).as("cells"))
       val top = toks.groupBy("term").agg(count(lit(1)).as("n"))
         .orderBy(col("n").desc, col("term")).limit(CmTopN)
@@ -1522,7 +1522,7 @@ object Extensions {
       t(s, dir, "documents").select(col("doc_id"),
         length(col("text")).cast("long").as("len"),
         graft.functions.Rounding.pround(
-          graft.functions.CharEntropyFn.column(s, col("text")), 6)
+          graft.functions.CharEntropyFn.column(col("text")), 6)
           .as("entropy"))
         .orderBy("doc_id")),
 
@@ -1889,7 +1889,7 @@ object Extensions {
       Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 10),
         "vec_id", "embedding", AnnK,
         (a, b) => graft.functions.Rounding.pround(
-          graft.functions.CosineSimilarity.column(s, a, b), 6))
+          graft.functions.CosineSimilarity.column(a, b), 6))
         .withColumn("rank", col("rank").cast("long"))
         .orderBy("query_id", "rank")
     }),
@@ -1985,7 +1985,6 @@ object Extensions {
     // deterministic pair sample — the empirical distortion the
     // prefilter actually pays at k=16 (E[ratio]=1, spread ~√(2/k)).
     "emb_jl_distortion" -> ((s, dir) => {
-      val spark = s
       val emb = t(s, dir, "embeddings").filter(col("vec_id") < 32)
       val proj = graft.operators.Pca.project(emb, "vec_id", "embedding",
         JlSigns)
@@ -1995,9 +1994,9 @@ object Extensions {
       val b = withP.select(col("vec_id").as("vec_b"),
         col("embedding").as("bv"), col("vec").as("bp"))
       val d2 = graft.functions.Rounding.pround(
-        graft.functions.VectorExprs.l2DistSq(spark, col("av"), col("bv")), 6)
+        graft.functions.VectorExprs.l2DistSq(col("av"), col("bv")), 6)
       val d2p = graft.functions.Rounding.pround(
-        graft.functions.VectorExprs.l2DistSq(spark, col("ap"), col("bp")), 6)
+        graft.functions.VectorExprs.l2DistSq(col("ap"), col("bp")), 6)
       a.crossJoin(b).filter(col("vec_a") < col("vec_b"))
         .withColumn("d2", d2).withColumn("d2_jl", d2p)
         .withColumn("ratio", when(col("d2") > 0,
@@ -2058,7 +2057,7 @@ object Extensions {
           Seq("cand_id"))
         .select(col("cand_id").as("vec_id"),
           graft.functions.Rounding.pround(
-            graft.functions.PqCodec.adc(s, col("codes"), col("embedding"),
+            graft.functions.PqCodec.adc(col("codes"), col("embedding"),
               PqBooks), 6).as("recon_err"))
         .orderBy("vec_id")
     }),
@@ -2078,7 +2077,7 @@ object Extensions {
           Seq("cand_id"))
         .select(col("cand_id").as("vec_id"),
           graft.functions.Rounding.pround(
-            graft.functions.Sq8Codec.adc(s, col("codes"), col("embedding"),
+            graft.functions.Sq8Codec.adc(col("codes"), col("embedding"),
               mins, deltas), 6).as("recon_err"))
         .orderBy("vec_id")
     }),
@@ -2153,7 +2152,7 @@ object Extensions {
       val exact = Similarity.bruteForceTopK(emb, qs, "vec_id",
         "embedding", AnnK,
         (a, b) => lit(0.0) - graft.functions.Rounding.pround(
-          graft.functions.VectorExprs.l2DistSq(s, a, b), 6))
+          graft.functions.VectorExprs.l2DistSq(a, b), 6))
       Similarity.recallAtK(ann, exact, AnnK).orderBy("query_id")
     }),
 
@@ -2248,7 +2247,7 @@ object Extensions {
       val bestWitness = dropped
         .join(e, col("d_id") =!= col("vec_id"))
         .groupBy("d_id")
-        .agg(max(Similarity.cosineFused(s, col("d_vec"), col("embedding")))
+        .agg(max(Similarity.cosineFused(col("d_vec"), col("embedding")))
           .as("best"))
       val total = e.agg(count(lit(1)).as("n_total"))
       val keptN = kept.agg((count(lit(1)) > 0).cast("int")

@@ -15,13 +15,12 @@ class CosineSimilaritySpec extends SparkSpec {
       .select(
         Similarity.cosine($"a.embedding", $"b.embedding", 12).as("hof"),
         graft.functions.Rounding.pround(
-          CosineSimilarity.column(spark, $"a.embedding", $"b.embedding"), 12)
+          CosineSimilarity.column($"a.embedding", $"b.embedding"), 12)
           .as("native"))
     assert(pairs.filter($"hof" =!= $"native").count() == 0)
   }
 
   test("native expression survives SQL registration") {
-    CosineSimilarity.register(spark)
     val r = spark.sql(
       "SELECT cosine_sim(array(1.0F, 0.0F), array(1.0F, 0.0F)) AS c")
       .as[Double].head()
@@ -29,7 +28,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("null array yields null") {
-    CosineSimilarity.register(spark)
     val r = spark.sql(
       "SELECT cosine_sim(CAST(NULL AS ARRAY<FLOAT>), array(1.0F)) AS c")
       .select(isnull($"c")).as[Boolean].head()
@@ -37,7 +35,6 @@ class CosineSimilaritySpec extends SparkSpec {
   }
 
   test("zero-norm operands score 0.0, never NaN — native and HOF agree") {
-    CosineSimilarity.register(spark)
     val native = spark.sql(
       "SELECT cosine_sim(array(0.0F, 0.0F), array(1.0F, 0.0F)) AS c")
       .as[Double].head()
@@ -49,7 +46,6 @@ class CosineSimilaritySpec extends SparkSpec {
 
   test("double-array operands read correctly (the hashed-embedding " +
       "element type) and match the float-array result") {
-    CosineSimilarity.register(spark)
     val d = spark.sql(
       "SELECT cosine_sim(array(0.6D, 0.8D), array(0.8D, 0.6D)) AS c")
       .as[Double].head()

@@ -12,7 +12,7 @@ class CountMinSpec extends SparkSpec {
       .as("term"))
 
   test("never underestimates: est >= exact for EVERY distinct fixture term") {
-    val sketch = toks.agg(CmSketch.column(spark, $"term", 4, 64).as("cells"))
+    val sketch = toks.agg(CmSketch.column($"term", 4, 64).as("cells"))
     val exact = toks.groupBy("term").agg(count(lit(1)).as("n"))
     val est = least((0 until 4).map { j =>
       val cell = (conv(substring(md5(concat(col("term"), lit(":cm" + j))),
@@ -26,7 +26,7 @@ class CountMinSpec extends SparkSpec {
     // types ⇒ pigeonhole collision) MUST overestimate someone — the
     // sketch approximates, and its error is one-sided
     assert(exact.count() > 16, "fixture vocabulary too small for the test")
-    val tiny = toks.agg(CmSketch.column(spark, $"term", 1, 16).as("cells"))
+    val tiny = toks.agg(CmSketch.column($"term", 1, 16).as("cells"))
     val cell16 = (conv(substring(md5(concat(col("term"), lit(":cm0"))),
       1, 8), 16, 10).cast("long") % 16).cast("int")
     val over = exact.crossJoin(broadcast(tiny))
@@ -37,15 +37,15 @@ class CountMinSpec extends SparkSpec {
   test("mergeable: repartitioned build equals single-partition build " +
       "cell for cell") {
     val a = toks.repartition(16)
-      .agg(CmSketch.column(spark, $"term", 4, 128)).as[Seq[Long]].head()
+      .agg(CmSketch.column($"term", 4, 128)).as[Seq[Long]].head()
     val b = toks.coalesce(1)
-      .agg(CmSketch.column(spark, $"term", 4, 128)).as[Seq[Long]].head()
+      .agg(CmSketch.column($"term", 4, 128)).as[Seq[Long]].head()
     assert(a == b)
   }
 
   test("grid mass: every row of the grid sums to the total update count") {
     val n = toks.count()
-    val cells = toks.agg(CmSketch.column(spark, $"term", 3, 32))
+    val cells = toks.agg(CmSketch.column($"term", 3, 32))
       .as[Seq[Long]].head()
     (0 until 3).foreach { j =>
       assert(cells.slice(j * 32, (j + 1) * 32).sum == n,
@@ -63,7 +63,7 @@ class CountMinSpec extends SparkSpec {
   test("nulls are skipped; exact when the grid is collision-free") {
     val df = Seq(Some("x"), None, Some("y"), Some("x"), None)
       .toDF("v")
-    val cells = df.agg(CmSketch.column(spark, $"v", 2, 1024))
+    val cells = df.agg(CmSketch.column($"v", 2, 1024))
       .as[Seq[Long]].head()
     assert(cells.sum == 2 * 3) // 3 non-null updates × depth 2
     // 2 keys in 1024 cells: point estimates are exact here

@@ -68,7 +68,6 @@ class DictGetSpec extends SparkSpec {
         (1L to 10L).toDF("k").withColumn("v", col("k")), "k",
         maxEntries = 5)
     }
-    Dictionaries.register(spark)
     Seq(1L).toDF("uid").createOrReplaceTempView("dg_spec_err_f")
     val e1 = intercept[Exception] {
       spark.sql("SELECT dict_get('dg_never_created', 'v', uid) " +

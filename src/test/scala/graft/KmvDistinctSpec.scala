@@ -9,7 +9,7 @@ class KmvDistinctSpec extends SparkSpec {
 
   test("exact below k: small cardinalities are counted exactly") {
     val df = (1 to 50).map(i => i % 10).toDF("v")
-    val est = df.agg(KmvDistinct.column(spark, $"v", 64).as("d"))
+    val est = df.agg(KmvDistinct.column($"v", 64).as("d"))
       .as[Long].head()
     assert(est == 10)
   }
@@ -17,7 +17,7 @@ class KmvDistinctSpec extends SparkSpec {
   test("estimate within ~3/sqrt(k) of exact on fixture data") {
     val e = Tables.load(spark, sf, "events")
     val exact = e.select("event_id").distinct().count() // 1000 distinct
-    val est = e.agg(KmvDistinct.column(spark, $"event_id", 256).as("d"))
+    val est = e.agg(KmvDistinct.column($"event_id", 256).as("d"))
       .as[Long].head()
     val err = math.abs(est - exact).toDouble / exact
     assert(err < 3.0 / math.sqrt(256), s"exact=$exact est=$est err=$err")
@@ -26,9 +26,9 @@ class KmvDistinctSpec extends SparkSpec {
   test("mergeable across partitions: repartitioned input gives same estimate") {
     val e = Tables.load(spark, sf, "events")
     val a = e.repartition(16)
-      .agg(KmvDistinct.column(spark, $"event_id", 128)).as[Long].head()
+      .agg(KmvDistinct.column($"event_id", 128)).as[Long].head()
     val b = e.coalesce(1)
-      .agg(KmvDistinct.column(spark, $"event_id", 128)).as[Long].head()
+      .agg(KmvDistinct.column($"event_id", 128)).as[Long].head()
     assert(a == b) // k-min set is order-insensitive
   }
 
@@ -63,7 +63,7 @@ class KmvDistinctSpec extends SparkSpec {
     // aggregate are independent draws of the same estimator: both must
     // sit within the error band of the exact count
     val agg = toks.groupBy("source")
-      .agg(KmvDistinct.column(spark, $"term", 256).as("est"))
+      .agg(KmvDistinct.column($"term", 256).as("est"))
       .as[(String, Long)].collect().toMap
     declarative.foreach { case (src, exact, declEst, _) =>
       val bound = 4.0 / math.sqrt(256)
@@ -74,7 +74,6 @@ class KmvDistinctSpec extends SparkSpec {
   }
 
   test("usable from SQL text and in GROUP BY") {
-    KmvDistinct.register(spark)
     Tables.load(spark, sf, "events").createOrReplaceTempView("kmv_events")
     val rows = spark.sql(
       """SELECT event_type, kmv_distinct(user_id, 64) AS approx_users

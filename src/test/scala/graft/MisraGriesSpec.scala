@@ -10,7 +10,7 @@ class MisraGriesSpec extends SparkSpec {
 
   private def sketch(df: org.apache.spark.sql.DataFrame, col0: String,
                      k: Int): Map[String, Long] =
-    df.select(MisraGries.column(spark, col(col0), k).as("hh"))
+    df.select(MisraGries.column(col(col0), k).as("hh"))
       .head().getSeq[Row](0)
       .map(r => r.getString(0) -> r.getLong(1)).toMap
 
@@ -60,7 +60,6 @@ class MisraGriesSpec extends SparkSpec {
   }
 
   test("usable from SQL (GraftExtensions registration) and in GROUP BY") {
-    GraftExtensions.install(spark)
     Seq(("en", "x"), ("en", "x"), ("en", "y"), ("de", "z"))
       .toDF("lang", "tok").createOrReplaceTempView("mg_toks")
     val rows = spark.sql(
@@ -89,7 +88,7 @@ class MisraGriesSpec extends SparkSpec {
   private def wSketch(df: org.apache.spark.sql.DataFrame, item: String,
                       w: String, k: Int): Map[String, Long] =
     df.select(graft.functions.MisraGriesWeighted
-        .column(spark, col(item), col(w), k).as("hh"))
+        .column(col(item), col(w), k).as("hh"))
       .head().getSeq[Row](0)
       .map(r => r.getString(0) -> r.getLong(1)).toMap
 
@@ -130,7 +129,6 @@ class MisraGriesSpec extends SparkSpec {
   }
 
   test("weighted: usable from SQL via GraftExtensions in GROUP BY") {
-    GraftExtensions.install(spark)
     Seq(("en", "x", 4L), ("en", "y", 1L), ("de", "z", 2L))
       .toDF("lang", "tok", "w").createOrReplaceTempView("mgw_toks")
     val rows = spark.sql(

@@ -29,7 +29,7 @@ class PhraseMatchSpec extends SparkSpec {
       "merge batch", "zzz never")
     val d = Tables.load(spark, sf, "documents")
     val viaAc = d.select($"doc_id",
-      explode(PhraseHits.column(spark, $"text", phrases)).as("term"))
+      explode(PhraseHits.column($"text", phrases)).as("term"))
       .as[(Long, String)].collect().toSet
     val viaContains = phrases.map(p =>
       d.filter(col("text").contains(p))
@@ -44,7 +44,7 @@ class PhraseMatchSpec extends SparkSpec {
     val df = Seq((1L, Some("a vector here")), (2L, Some("")),
       (3L, None), (4L, Some("nothing"))).toDF("id", "text")
     val out = df.select($"id",
-      PhraseHits.column(spark, $"text", Seq("vector", "qq")).as("h"))
+      PhraseHits.column($"text", Seq("vector", "qq")).as("h"))
       .as[(Long, Option[Seq[String]])].collect().toMap
     assert(out(1L).contains(Seq("vector")))
     assert(out(2L).contains(Seq.empty[String]))
@@ -63,7 +63,7 @@ class PhraseMatchSpec extends SparkSpec {
   test("phrase list must be foldable and non-empty") {
     intercept[Exception] {
       Seq("x").toDF("text").select(
-        PhraseHits.column(spark, $"text", Seq.empty)).collect()
+        PhraseHits.column($"text", Seq.empty)).collect()
     }
   }
 }

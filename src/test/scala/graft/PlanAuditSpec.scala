@@ -306,7 +306,7 @@ class PlanAuditSpec extends SparkSpec {
       .select(col("lang"),
         explode(graft.functions.TextFunctions.tokens(col("text"))).as("term"))
     val p = toks.groupBy("lang")
-      .agg(graft.functions.MisraGries.column(spark, col("term"), 10).as("hh"))
+      .agg(graft.functions.MisraGries.column(col("term"), 10).as("hh"))
       .queryExecution.executedPlan.toString
     assert(p.contains("ObjectHashAggregate"), p.take(2000))
     assert("ObjectHashAggregate".r.findAllIn(p).length >= 2,

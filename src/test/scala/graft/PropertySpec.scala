@@ -357,7 +357,7 @@ class PropertySpec extends SparkSpec {
       }
       // ADC of every vector against its own codes (dyadic inputs: the
       // reference .sum and the expression's fold are both exact here)
-      val adc = graft.functions.PqCodec.adc(spark,
+      val adc = graft.functions.PqCodec.adc(
         col("codes"), col("embedding"), books)
       val got = graft.operators.Similarity.pqEncode(df, "vec_id",
         "embedding", books)
@@ -370,6 +370,69 @@ class PropertySpec extends SparkSpec {
         assert(got(i.toLong) == want, s"adc mismatch for vec $i")
       }
     }
+  }
+
+  /** Reference SQ8 encode, the [[graft.functions.Sq8EncodeCodes]]
+    * contract: delta 0 → code 0, else half-up rounding clamped to
+    * [0, 255].
+    */
+  private def refSq8Encode(v: Array[Float], mins: Array[Double],
+                           deltas: Array[Double]): Seq[Int] =
+    v.indices.map { d =>
+      if (deltas(d) == 0.0) 0
+      else math.min(255.0, math.max(0.0,
+        math.floor((v(d).toDouble - mins(d)) / deltas(d) + 0.5))).toInt
+    }
+
+  /** Reference SQ8 ADC: Σ_d (q_d − (min_d + code_d·delta_d))². */
+  private def refSq8Adc(q: Array[Float], codes: Seq[Int], mins: Array[Double],
+                        deltas: Array[Double]): Double =
+    q.indices.foldLeft(0.0) { (s, d) =>
+      val diff = q(d).toDouble - (mins(d) + codes(d) * deltas(d))
+      s + diff * diff
+    }
+
+  test("PQ/SQ8 codec columns for two codebooks leave the function " +
+      "registry unchanged and match the reference encode and ADC") {
+    import graft.functions.{PqCodec, Sq8Codec}
+    val registry = spark.sessionState.functionRegistry
+    val before = registry.listFunction().toSet
+    val vecs = Seq(Array(0.5f, -1.0f, 0.25f, 2.0f),
+      Array(-0.75f, 1.5f, 1.0f, -0.5f), Array(3.0f, 0.0f, -2.0f, 0.125f))
+    val df = vecs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .toDF("vec_id", "embedding")
+    def rows(codes: org.apache.spark.sql.Column,
+             adc: org.apache.spark.sql.Column) =
+      df.select(col("vec_id"), col("embedding"), codes.as("codes"))
+        .select(col("vec_id"), col("codes"), adc.as("d")).collect()
+        .map(r => (vecs(r.getLong(0).toInt), r.getSeq[Int](1), r.getDouble(2)))
+
+    // nsub = 2 sub-quantizers of ksub = 2 dyadic 2-dim centroids
+    val booksA = Seq(Seq(Seq(0f, 0f), Seq(1f, -1f)),
+      Seq(Seq(0f, 2f), Seq(0.5f, 0.5f)))
+    val booksB = booksA.map(_.map(_.map(_ * -0.5f)))
+    Seq(booksA, booksB).foreach { books =>
+      rows(PqCodec.encode(col("embedding"), books),
+        PqCodec.adc(col("codes"), col("embedding"), books)).foreach {
+        case (v, codes, d) =>
+          assert(codes == refEncode(v, books))
+          assert(d == refAdc(v, codes, books))
+      }
+    }
+    // second bound set: a constant dimension (delta 0) and a clamp
+    val bounds = Seq(
+      (Array(-1.0, -1.0, -2.0, -0.5), Array(4.0, 2.5, 4.0, 2.5).map(_ / 255)),
+      (Array(0.0, -1.0, 0.0, 0.0), Array(1.0 / 255, 0.0, 2.0 / 255, 0.0)))
+    bounds.foreach { case (mins, deltas) =>
+      rows(Sq8Codec.encode(col("embedding"), mins, deltas),
+        Sq8Codec.adc(col("codes"), col("embedding"), mins, deltas)).foreach {
+        case (v, codes, d) =>
+          assert(codes == refSq8Encode(v, mins, deltas))
+          assert(d == refSq8Adc(v, codes, mins, deltas))
+      }
+    }
+    assert(registry.listFunction().toSet == before,
+      "codec columns must not register session functions")
   }
 
   private val changeLogGen: Gen[List[(Int, Int, String)]] =

@@ -29,7 +29,7 @@ class QuantileSketchSpec extends SparkSpec {
   test("rank error stays within 1% at δ=100 over a scrambled uniform " +
       "stream, tails tighter than the middle") {
     val df = scrambled(N).toDF("v")
-    val ests = TDigestQuantiles.column(spark, col("v"), 100, qs)
+    val ests = TDigestQuantiles.column(col("v"), 100, qs)
     val got = df.agg(ests.as("e")).as[Seq[Double]].head()
     qs.zip(got).foreach { case (q, est) =>
       val err = rankErr(est, q, N)
@@ -42,7 +42,7 @@ class QuantileSketchSpec extends SparkSpec {
       "honor the rank-error bound (map-side combinable state)") {
     for (parts <- Seq(1, 13)) {
       val df = scrambled(N).toDF("v").repartition(parts)
-      val got = df.agg(TDigestQuantiles.column(spark, col("v"), 100, qs)
+      val got = df.agg(TDigestQuantiles.column(col("v"), 100, qs)
         .as("e")).as[Seq[Double]].head()
       qs.zip(got).foreach { case (q, est) =>
         assert(rankErr(est, q, N) <= 0.01,
@@ -53,7 +53,7 @@ class QuantileSketchSpec extends SparkSpec {
 
   test("skewed data (quadratic ramp): rank error still bounded") {
     val df = scrambled(N).map(v => v * v).toDF("v")
-    val got = df.agg(TDigestQuantiles.column(spark, col("v"), 100,
+    val got = df.agg(TDigestQuantiles.column(col("v"), 100,
       Seq(0.5, 0.99)).as("e")).as[Seq[Double]].head()
     val exact = scrambled(N).map(v => v * v).sorted
     // rank of the estimate in the true sorted data vs target rank
@@ -84,7 +84,6 @@ class QuantileSketchSpec extends SparkSpec {
   }
 
   test("SQL registration: tdigest_quantiles callable from spark.sql") {
-    TDigestQuantiles.register(spark)
     scrambled(1000).toDF("v").createOrReplaceTempView("td_vals")
     val est = spark.sql(
       "SELECT tdigest_quantiles(v, 100, array(0.5D)) AS e FROM td_vals")
@@ -94,11 +93,11 @@ class QuantileSketchSpec extends SparkSpec {
 
   test("empty and null inputs: NaN quantiles, no crash") {
     val got = Seq.empty[Double].toDF("v")
-      .agg(TDigestQuantiles.column(spark, col("v"), 100, Seq(0.5)).as("e"))
+      .agg(TDigestQuantiles.column(col("v"), 100, Seq(0.5)).as("e"))
       .as[Seq[Double]].head()
     assert(got.head.isNaN)
     val withNulls = Seq(Some(1.0), None, Some(3.0)).toDF("v")
-      .agg(TDigestQuantiles.column(spark, col("v"), 100, Seq(0.5)).as("e"))
+      .agg(TDigestQuantiles.column(col("v"), 100, Seq(0.5)).as("e"))
       .as[Seq[Double]].head()
     assert(withNulls.head == 2.0, "nulls skipped, midpoint of {1,3}")
   }

@@ -686,9 +686,8 @@ class SimilaritySpec extends SparkSpec {
     val rows = (0L until 20L).map(s => (s, vec(s), vec(s + 7)))
       .toDF("id", "va", "vb")
     val got = rows.select($"id",
-      VectorExprs.hammingCodes(spark,
-        VectorExprs.signPack(spark, $"va"),
-        VectorExprs.signPack(spark, $"vb")).as("packed"),
+      VectorExprs.hammingCodes(VectorExprs.signPack($"va"),
+        VectorExprs.signPack($"vb")).as("packed"),
       aggregate(zip_with($"va", $"vb",
         (x, y) => when((x >= 0f) =!= (y >= 0f), 1).otherwise(0)),
         lit(0), (a, v) => a + v).as("naive"))
@@ -697,7 +696,7 @@ class SimilaritySpec extends SparkSpec {
       assert(packed == naive, s"id=$id packed=$packed naive=$naive")
     }
     // code width: ceil(70/64) = 2 words
-    val w = rows.select(size(VectorExprs.signPack(spark, $"va")))
+    val w = rows.select(size(VectorExprs.signPack($"va")))
       .as[Int].head()
     assert(w == 2)
   }

@@ -3,27 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session base: one local SparkSession per suite (lazy). */
+/** Shared session base: one local SparkSession per suite (lazy), built
+  * by [[Sessions]] so tests run the production configuration.
+  */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // Pin ANSI on (the Spark 4.x default) so overflow-guard expectations
-    // don't silently depend on the engine default changing per profile.
-    .config("spark.sql.ansi.enabled", "true")
-    .config("spark.sql.warehouse.dir",
-      java.nio.file.Files.createTempDirectory("graft_wh").toString)
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.start(
+    Sessions.builder(4, getClass.getSimpleName, shufflePartitions = 4)
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Files.createTempDirectory("graft_wh").toString))
 
   locally {
     spark.sparkContext.setLogLevel("WARN")
-    // reliable-checkpoint target for Dedup/DedupCluster materialization
-    if (spark.sparkContext.getCheckpointDir.isEmpty)
-      spark.sparkContext.setCheckpointDir(
-        java.nio.file.Files.createTempDirectory("graft_ckpt").toString)
   }
 
   val sf: String = "/root/testdata/sf0.001"

@@ -83,7 +83,7 @@ class TextFunctionsSpec extends SparkSpec {
       (6L, "the cat sat on the mat and the dog lay on the rug by the door"),
       (7L, "ABCDEFGHIJKLMNOPQRSTUVWXYZ012345")).toDF("id", "text")
     val h = df.select($"id", graft.functions.Rounding.pround(
-        graft.functions.CharEntropyFn.column(spark, $"text"), 6).as("h"))
+        graft.functions.CharEntropyFn.column($"text"), 6).as("h"))
       .as[(Long, Double)].collect().toMap
     assert(h(1L) == 0.0 && h(4L) == 0.0)
     assert(h(2L) == 1.0 && h(3L) == 2.0)
