@@ -5,14 +5,14 @@ package graft
   * Round 13 measured the sf30 knee entries in-process at sweep position
   * ~60, where they inherit the 25 GB-shuffle predecessors' page-cache /
   * GC aftermath — `graph_hits` read ×3.68 in the artifact while the
-  * same binaries in a fresh JVM (GraphProbe) read ×2.87, inside the
+  * same binaries in a fresh JVM read ×2.87, inside the
   * pro-rated bound. The committed artifact must measure what it gates,
   * so from round 14 the knee block runs each measurement through this
   * main in its own JVM (ScaleSweep forks it sequentially — never two
   * 100 GB heaps alive at once) and SCALE.json records
   * `knee_isolated:true`.
   *
-  * Protocol (the GraphProbe idle-box convention): JIT/codegen/page-cache
+  * Protocol (the idle-box convention): JIT/codegen/page-cache
   * warm-up on the SAME query at the TARGET dir, then min-of-2 with
   * clearCache + unpersist-all between passes. Spill/shuffle/peak come
   * from the min-time pass (ScaleSweep's rule: a spill that reproduces
@@ -24,7 +24,17 @@ package graft
   * 29.5 s cold, numerator rock-stable at 83.4 s), pushing an honestly
   * linear query to ×3.44 against the ×3.27 bound.
   *
-  * Output: ONE machine line on stdout —
+  * It is also the per-stage breakdown tool for scale findings (round
+  * 15: the `graph_hits` ×4.30 sf30 knee). A knee ratio says THAT an
+  * entry grew super-linearly; the `STAGE` rows say WHERE: every stage of
+  * the min pass with its callsite, wall duration, task/CPU/GC time,
+  * shuffle read/write, input bytes and spill, in submission order.
+  * Running it at two scales and grouping by callsite turns "the whole
+  * query is ×4.3" into "stage class X is ×7 while everything else is ×3".
+  *
+  * Usage: `runMain graft.KneeProbe <entry> <dir> [warmDir] [partitions]`.
+  * Output on stdout: the min pass's `STAGE` rows and a `STAGETOTAL`
+  * line, then ONE machine line —
   * `KNEEPROBE <sec> <spillBytes> <shuffleWriteBytes> <peakExecMem>` or
   * `KNEEPROBE FAIL <message>`.
   */
@@ -54,36 +64,31 @@ object KneeProbe {
         .config("spark.cleaner.periodicGC.interval",
           sys.env.getOrElse("SPARK_GRAFT_PERIODIC_GC", "60s")))
     spark.sparkContext.setLogLevel("ERROR")
-    val metrics = new ScaleSweep.MetricsListener
-    spark.sparkContext.addSparkListener(metrics)
-    def drain(): Unit = try {
-      val sc = spark.sparkContext
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    } catch { case _: Throwable => Thread.sleep(500) }
-    def once(d: String): (Double, Long, Long, Long) = {
-      metrics.reset()
-      val t0 = System.nanoTime()
-      // build entries (Unit-returning stored-index writers) time the
-      // build itself — their write IS the materialization; query
-      // entries materialize through the noop sink (the Bench rule)
-      SparkEntry.benchBuilds.get(name) match {
-        case Some(build) => build(spark, d)
-        case None =>
-          (SparkEntry.queries ++ SparkEntry.sweepQueries)(name)(spark, d)
-            .write.format("noop").mode("overwrite").save()
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      drain()
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      (sec, metrics.spill, metrics.shuffleWrite, metrics.peak)
+    val metrics = RunMetrics.attach(spark)
+    def once(d: String): RunMetrics.Sample = {
+      // build entries time the build itself — their write IS the
+      // materialization; query entries go through the noop sink
+      val s = metrics.measure(spark)(metrics.materialize(spark, name, d))
+      RunMetrics.isolate(spark)
+      s
     }
     try {
       once(warmDir) // JIT + page-cache warm-up off the clock, AT target
-      val best = Seq(once(dir), once(dir)).minBy(_._1)
-      println(s"KNEEPROBE ${best._1} ${best._2} ${best._3} ${best._4}")
+      val best = Seq(once(dir), once(dir)).minBy(_.sec)
+      val t0 = best.rows.headOption.map(_.submitMs).getOrElse(0L)
+      best.rows.foreach { r =>
+        println(f"STAGE ${r.id}%5d +${(r.submitMs - t0) / 1000.0}%8.2fs " +
+          f"dur=${r.durMs / 1000.0}%8.2fs task=${r.taskMs / 1000.0}%9.2fs " +
+          f"cpu=${r.cpuMs / 1000.0}%9.2fs gc=${r.gcMs / 1000.0}%7.2fs " +
+          f"n=${r.tasks}%3d sr=${r.shufReadB / 1e6}%9.1fMB " +
+          f"sw=${r.shufWriteB / 1e6}%9.1fMB in=${r.inputB / 1e6}%9.1fMB " +
+          f"spill=${r.spillB / 1e6}%7.1fMB  ${r.name}")
+      }
+      println(f"STAGETOTAL $name $dir parts=$partitions wall=${best.sec}%.2f " +
+        f"stages=${best.stages} taskSec=${best.taskSec}%.1f " +
+        f"cpuSec=${best.cpuSec}%.1f gcSec=${best.gcSec}%.1f")
+      println(s"KNEEPROBE ${best.sec} ${best.spillB} ${best.shuffleWriteB} " +
+        s"${best.peakExecB}")
     } catch {
       case e: Throwable =>
         println("KNEEPROBE FAIL " +

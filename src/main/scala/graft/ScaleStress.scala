@@ -20,32 +20,6 @@ object ScaleStress {
                                 spillBytes: Long = 0L,
                                 peakExecMem: Long = 0L)
 
-  /** Per-stage execution-memory evidence: a SparkListener summing
-    * memory+disk spill and tracking the largest stage-aggregated
-    * peak-execution-memory over the stages completing during one
-    * stress stage. (Stage-level taskMetrics aggregate per-task
-    * accumulators — the peak is the max over stages of the per-stage
-    * task sum, an upper bound on simultaneous execution memory.) */
-  private class MetricsListener
-      extends org.apache.spark.scheduler.SparkListener {
-    @volatile var spill = 0L
-    @volatile var peak = 0L
-    /** Monotone count of delivered stage-completed events — the real
-      * quiescence signal the drain fallback polls (never reset).
-      */
-    @volatile var delivered = 0L
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        spill += m.memoryBytesSpilled + m.diskBytesSpilled
-        peak = math.max(peak, m.peakExecutionMemory)
-      }
-      delivered += 1
-    }
-    def reset(): Unit = { spill = 0L; peak = 0L }
-  }
-
   def main(args: Array[String]): Unit = {
     val spark = Sessions.local(32, "scale-stress")
     spark.sparkContext.setLogLevel("ERROR")
@@ -57,7 +31,7 @@ object ScaleStress {
     // round carries machine-checkable proof the guard bounds ran — the
     // same file-landing rule as Bench's BENCH.json.
     val entries = results.map(r =>
-      "\"" + r.label.replace("\"", "'") + "\":{\"sec\":" + r.sec +
+      RunMetrics.jsonString(r.label) + ":{\"sec\":" + r.sec +
         ",\"ok\":" + r.ok + ",\"spillBytes\":" + r.spillBytes +
         ",\"peakExecMem\":" + r.peakExecMem + "}").mkString("{", ",", "}")
     val line = s"""{"stress_ok":${results.forall(_.ok)},"stages":$entries}"""
@@ -65,39 +39,6 @@ object ScaleStress {
       (line + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     if (results.exists(!_.ok)) sys.exit(1)
     spark.stop()
-  }
-
-  /** Blocks until the async listener bus has delivered every queued
-    * event, so per-stage spill/peak attribution is exact.
-    * `SparkContext.listenerBus` is `private[spark]` — which compiles to
-    * a public JVM method, so one reflective hop reaches the public
-    * `LiveListenerBus.waitUntilEmpty()`. If the reflective path ever
-    * breaks (renamed in a future Spark), falls back to polling for
-    * quiescence rather than reverting to a blind fixed sleep.
-    */
-  private def drainListenerBus(spark: org.apache.spark.sql.SparkSession,
-                               deliveredCount: () => Long): Unit = {
-    val sc = spark.sparkContext
-    try {
-      val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-      bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-    } catch {
-      case _: Throwable =>
-        // quiescence poll over a REAL signal: the listener's delivered
-        // event counter must hold still across two consecutive 100 ms
-        // samples (bounded at 5 s) — a bare fixed sleep would quietly
-        // reintroduce the late-event mis-attribution this drain exists
-        // to prevent
-        val deadline = System.nanoTime() + 5000000000L
-        var settled = 0
-        var last = deliveredCount()
-        while (settled < 2 && System.nanoTime() < deadline) {
-          Thread.sleep(100)
-          val now = deliveredCount()
-          settled = if (now == last) settled + 1 else 0
-          last = now
-        }
-    }
   }
 
   /** Runs every stress stage; a stage is ok=false if it throws OR (for
@@ -112,30 +53,23 @@ object ScaleStress {
     import spark.implicits._
     val tmp = java.nio.file.Files.createTempDirectory("graft_scale").toString
     val out = scala.collection.mutable.ArrayBuffer.empty[StressResult]
-    val metrics = new MetricsListener
-    spark.sparkContext.addSparkListener(metrics)
+    val metrics = RunMetrics.attach(spark)
 
     /** Time a stage whose body returns its own pass/fail verdict. */
     def check(label: String, noSpill: Boolean = false)(f: => Boolean): Unit = {
-      metrics.reset()
-      val t0 = System.nanoTime()
-      val bodyOk = try f catch {
-        case e: Throwable =>
-          System.err.println(s"[stress] $label FAILED: ${e.getMessage}")
-          false
+      var bodyOk = false
+      val s = metrics.measure(spark) {
+        bodyOk = try f catch {
+          case e: Throwable =>
+            System.err.println(s"[stress] $label FAILED: ${e.getMessage}")
+            false
+        }
       }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // listener-bus drain: stage-completed events are async; a fixed
-      // sleep can mis-attribute a late event to the NEXT stage (masking
-      // a real spill or flakily failing an innocent stage) — drain the
-      // bus properly instead
-      drainListenerBus(spark, () => metrics.delivered)
-      val spilled = metrics.spill
-      val ok = bodyOk && (!noSpill || spilled == 0L)
-      if (bodyOk && noSpill && spilled > 0L)
+      val ok = bodyOk && (!noSpill || s.spillB == 0L)
+      if (bodyOk && noSpill && s.spillB > 0L)
         System.err.println(
-          s"[stress] $label FAILED zero-spill bound: $spilled bytes spilled")
-      out += StressResult(label, sec, ok, spilled, metrics.peak)
+          s"[stress] $label FAILED zero-spill bound: ${s.spillB} bytes spilled")
+      out += StressResult(label, s.sec, ok, s.spillB, s.peakExecB)
     }
     /** Time a throughput stage: ok = completed (+ the zero-spill bound
       * when flagged). */

@@ -124,7 +124,7 @@ object ScaleSweep {
     * 64 GB heap evicts the 180 M-edge cache between half-steps). The
     * SAME binaries at 100 GB: pagerank 199.6 s ×2.10 zero-spill, hits
     * 141.8 s ×2.87 zero-spill — both inside the pro-rated bound
-    * (GraphProbe, idle box, min-of-2; PLANS.md round 13). On a
+    * (fresh JVM, idle box, min-of-2; PLANS.md round 13). On a
     * cluster, 3× data arrives with 3× aggregate executor memory —
     * the 100 GB regime, not the 64 GB one.
     *
@@ -178,7 +178,7 @@ object ScaleSweep {
     *    iteration into 3 task WAVES, tripling per-iteration latency ×
     *    ~40 stages — it emulates a 3× cluster's data layout but not
     *    its parallel latency (measured r14: graph_hits sf30 warm
-    *    275.4 s at 96 partitions vs ~142 s at 32, the r13 GraphProbe
+    *    275.4 s at 96 partitions vs ~142 s at 32, the r13 fresh-JVM
     *    number on the same binaries). Their per-task work is hash
     *    probes (linear), so growing per-task input costs no log term.
     *
@@ -200,23 +200,6 @@ object ScaleSweep {
                                // what was measured, not a prose summary
                                // that can drift from the constants
                                parts10: Int = -1, parts30: Int = -1)
-
-  private[graft] class MetricsListener
-      extends org.apache.spark.scheduler.SparkListener {
-    @volatile var spill = 0L
-    @volatile var peak = 0L
-    @volatile var shuffleWrite = 0L
-    override def onStageCompleted(
-        sc: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit = {
-      val m = sc.stageInfo.taskMetrics
-      if (m != null) {
-        spill += m.memoryBytesSpilled + m.diskBytesSpilled
-        shuffleWrite += m.shuffleWriteMetrics.bytesWritten
-        peak = math.max(peak, m.peakExecutionMemory)
-      }
-    }
-    def reset(): Unit = { spill = 0L; peak = 0L; shuffleWrite = 0L }
-  }
 
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -294,35 +277,15 @@ object ScaleSweep {
     generateKneeIfAbsent(spark, base, big30, FactorKnee)
     generateKneeEmb(spark, base, big30, FactorKnee)
 
-    val metrics = new MetricsListener
-    spark.sparkContext.addSparkListener(metrics)
-    def drain(): Unit = {
-      val sc = spark.sparkContext
-      try {
-        val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
-        bus.getClass.getMethod("waitUntilEmpty").invoke(bus)
-      } catch { case _: Throwable => Thread.sleep(500) }
-    }
+    val metrics = RunMetrics.attach(spark)
     def timedOnce(name: String, dir: String): (Double, Long, Long, Long, String) = {
-      metrics.reset()
-      val t0 = System.nanoTime()
-      val note = try {
-        (SparkEntry.queries ++ SparkEntry.sweepQueries)(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        ""
-      } catch { case e: Throwable => s"FAILED: ${e.getMessage}" }
-      val sec = (System.nanoTime() - t0) / 1e9
-      drain()
-      // measurement isolation: release every block the query pinned.
-      // Operators return persisted frames under a "caller owns the
-      // unpersist" contract, and a 40+-measurement sweep of leftovers
-      // otherwise fills the storage pool — observed as 58 GB RSS on the
-      // 64 GB heap and a late-sweep ~10× slowdown from pure GC churn
-      // (corpus_split sf1: 12 s early in a sweep, 119 s as entry 38).
-      spark.catalog.clearCache()
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      (sec, metrics.spill, metrics.shuffleWrite, metrics.peak, note)
+      var note = ""
+      val s = metrics.measure(spark) {
+        try metrics.materialize(spark, name, dir)
+        catch { case e: Throwable => note = s"FAILED: ${e.getMessage}" }
+      }
+      RunMetrics.isolate(spark)
+      (s.sec, s.spillB, s.shuffleWriteB, s.peakExecB, note)
     }
     // Min-of-2 per measurement (the BENCH/BASELINE comparability rule):
     // a single pass right after a heavy query inherits its GC/page-cache
@@ -417,7 +380,8 @@ object ScaleSweep {
   private def block(rs: Seq[SweepResult], loField: String,
                     hiField: String): String =
     rs.map(r =>
-      "\"" + r.name + "\":{\"" + loField + "\":" + f"${r.secBase}%.3f" +
+      RunMetrics.jsonString(r.name) + ":{\"" + loField + "\":" +
+        f"${r.secBase}%.3f" +
         ",\"" + hiField + "\":" + f"${r.secBig}%.3f" +
         ",\"ratio\":" + f"${r.ratio}%.2f" +
         ",\"ok\":" + r.ok +
@@ -428,7 +392,8 @@ object ScaleSweep {
           ",\"partitions_sf10\":" + r.parts10 +
             ",\"partitions_sf30\":" + r.parts30
          else "") +
-        (if (r.note.nonEmpty) ",\"note\":\"" + jsonEscape(r.note) + "\"" else "") +
+        (if (r.note.nonEmpty) ",\"note\":" + RunMetrics.jsonString(r.note)
+         else "") +
         "}").mkString("{", ",", "}")
 
   /** Assembles + lands SCALE.json from knee results plus decade-block
@@ -510,25 +475,6 @@ object ScaleSweep {
           s"FAILED: KneeProbe rc=$rc no machine line; stderr tail: " +
             err.takeRight(150))
     }
-  }
-
-  /** JSON string escape for the note field: quotes, backslashes and
-    * control characters (exception messages carry all three) — a raw
-    * replace of quotes alone left the committed artifact invalid JSON
-    * whenever a message contained a backslash or newline.
-    */
-  private[graft] def jsonEscape(s: String): String = {
-    val sb = new StringBuilder(s.length + 8)
-    s.foreach {
-      case '"' => sb.append("\\\"")
-      case '\\' => sb.append("\\\\")
-      case '\n' => sb.append("\\n")
-      case '\r' => sb.append("\\r")
-      case '\t' => sb.append("\\t")
-      case c if c < 0x20 => sb.append(f"\\u${c.toInt}%04x")
-      case c => sb.append(c)
-    }
-    sb.result()
   }
 
   // --- amplified-fixture generation ------------------------------------

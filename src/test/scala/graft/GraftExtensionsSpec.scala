@@ -112,17 +112,20 @@ class GraftExtensionsSpec extends SparkSpec {
     }
   }
 
+  /** Names of the `.scala` files under `root` whose text matches `call`
+    * (`depth` 1: only the files directly in `root`). */
+  private def calling(root: String, call: String,
+                      depth: Int = Int.MaxValue): Seq[String] = {
+    assert(Files.isDirectory(Paths.get(root)), "run from the repository root")
+    val re = call.r
+    Files.walk(Paths.get(root), depth).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .filter(p => re.findFirstIn(Files.readString(p)).isDefined)
+      .map(_.getFileName.toString).toSeq.sorted
+  }
+
   test("source guard: sessions only from Sessions, SQL functions only " +
       "from GraftExtensions") {
-    def calling(root: String, call: String): Seq[String] = {
-      val re = call.r
-      Files.walk(Paths.get(root)).iterator().asScala
-        .filter(_.toString.endsWith(".scala"))
-        .filter(p => re.findFirstIn(Files.readString(p)).isDefined)
-        .map(_.getFileName.toString).toSeq.sorted
-    }
-    assert(Files.isDirectory(Paths.get("src/main/scala")),
-      "run from the repository root")
     assert(calling("src/main/scala", """SparkSession\s*\.\s*builder\s*\(""")
       == Seq("Sessions.scala"))
     // the group keeps the plain name out of this file, so a text search
@@ -130,5 +133,18 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(calling("src", """\.createOrReplace(TempFunction)\s*\(""").isEmpty)
     assert(calling("src", """\.registerFunction\s*\(""")
       .forall(_ == "GraftExtensions.scala"))
+  }
+
+  test("source guard: one metrics listener, one listener-bus drain, no " +
+      "sleeping harness main") {
+    // one assertion, so a failure lists every offending file at once
+    val found = Seq(
+      "listener" -> calling("src/main/scala",
+        """(extends|new)\s+[\w.]*SparkListener\b"""),
+      "bus" -> calling("src/main/scala", """listenerBus|waitUntilEmpty"""),
+      "sleep" -> calling("src/main/scala/graft", """Thread\s*\.\s*sleep""",
+        depth = 1))
+    assert(found == Seq("listener" -> Seq("RunMetrics.scala"),
+      "bus" -> Seq("GraftAccess.scala"), "sleep" -> Seq()))
   }
 }
