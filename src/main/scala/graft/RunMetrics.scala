@@ -84,12 +84,15 @@ final class RunMetrics extends SparkListener {
 
 object RunMetrics {
 
-  /** One completed stage; times in ms, sizes in bytes. */
+  /** One completed stage; times in ms, sizes in bytes. `inputRows` is
+    * the records the stage's scans read (a JDBC scan counts every row
+    * the source served).
+    */
   final case class StageRow(id: Int, submitMs: Long, durMs: Long,
                             taskMs: Long, cpuMs: Long, gcMs: Long,
                             tasks: Int, shufReadB: Long, shufWriteB: Long,
-                            inputB: Long, spillB: Long, peakExecB: Long,
-                            name: String)
+                            inputB: Long, inputRows: Long, spillB: Long,
+                            peakExecB: Long, name: String)
 
   object StageRow {
     def apply(i: StageInfo): StageRow = {
@@ -103,6 +106,7 @@ object RunMetrics {
         get(_.shuffleReadMetrics.totalBytesRead),
         get(_.shuffleWriteMetrics.bytesWritten),
         get(_.inputMetrics.bytesRead),
+        get(_.inputMetrics.recordsRead),
         get(m => m.memoryBytesSpilled + m.diskBytesSpilled),
         get(_.peakExecutionMemory),
         i.name.replaceAll("[\r\n]", " "))
@@ -122,6 +126,7 @@ object RunMetrics {
     def shuffleReadB: Long = rows.map(_.shufReadB).sum
     def shuffleWriteB: Long = rows.map(_.shufWriteB).sum
     def inputB: Long = rows.map(_.inputB).sum
+    def inputRows: Long = rows.map(_.inputRows).sum
     def spillB: Long = rows.map(_.spillB).sum
     def peakExecB: Long = rows.map(_.peakExecB).maxOption.getOrElse(0L)
   }

@@ -148,7 +148,7 @@ object ScaleStress {
         keyCol = "event_id", tsCol = "ts", versionCol = "ts",
         projection = Seq("event_id", "ts", "user_id", "event_type", "value", "props"),
         sourceName = "superset")
-      pipeline.IncrementalLoad.run(spark, bigEv, s"$tmp/target", cfg).count()
+      pipeline.IncrementalLoad.run(spark, bigEv, s"$tmp/target", cfg)
     }
     time("A4 dedup window over 2M rows") {
       operators.Relational.dedupLatest(bigEv, Seq("user_id"), "ts",

@@ -97,11 +97,16 @@ object SupersetReplicationJob {
     // day 1: cold start (epoch watermark), three tables in parallel
     val day1 = Dag.runV2(spark, jobs(500))
     println(s"day1 loaded: $day1")
+    // ab_user: 25 source rows, 20 ids — keep-latest dedup writes one each
+    require(day1 == Map("logs" -> 500L, "ab_user" -> 20L, "dashboards" -> 5L),
+      s"day 1 must load every source row once: $day1")
 
     // day 2: new source rows; strict watermark ships only the delta
     lateArrivals()
     val day2 = Dag.runV2(spark, jobs(600))
     println(s"day2 loaded: $day2")
+    require(day2 == Map("logs" -> 100L, "ab_user" -> 0L, "dashboards" -> 0L),
+      s"day 2 must load only the 100 late logs rows: $day2")
 
     // serve: keep-latest views + dictionary enrichment
     val logs = IncrementalLoad.readDeduped(spark, s"$base/logs", "id", "dttm")
@@ -111,13 +116,16 @@ object SupersetReplicationJob {
     val enriched = Relational.enrich(logs, userDict.get(), "user_id", "id",
       Seq("username"))
       .withColumn("username", coalesce(col("username"), lit("undefined")))
-    println(s"logs rows: ${logs.count()} (expect 600)")
+    val logRows = logs.count()
+    println(s"logs rows: $logRows")
+    require(logRows == 600, s"logs must hold 600 rows, got $logRows")
     println("top users:")
     enriched.groupBy("username").count()
       .orderBy(col("count").desc, col("username")).limit(5).show()
     val scd = userDict.get().filter(col("id") === 0)
       .select("username").first().getString(0)
-    println(s"user 0 resolves to latest version: $scd (expect user_0_v2)")
+    println(s"user 0 resolves to latest version: $scd")
+    require(scd == "user_0_v2", s"user 0 must resolve to user_0_v2, got $scd")
     spark.stop()
   }
 }

@@ -256,21 +256,9 @@ object DedupCluster {
 
     var pinned: DataFrame = null
     var round = 0
-    val tInit = System.nanoTime()
     var edgeCount = edges.count()
-    if (sys.props.contains("graft.cc.debug"))
-      System.err.println(f"[cc] initial edge materialization: $edgeCount " +
-        f"edges in ${(System.nanoTime() - tInit) / 1e9}%.1f s")
     var converged = edgeCount == 0
     while (round < maxRounds && !converged) {
-      val dbg = sys.props.contains("graft.cc.debug")
-      def lap(what: String, t0: Long): Long = {
-        val t = System.nanoTime()
-        if (dbg) System.err.println(
-          f"[cc]   round ${round + 1} $what: ${(t - t0) / 1e9}%.1f s")
-        t
-      }
-      var t = System.nanoTime()
       val step = smallStar(largeStar(edges))
       val isCut = (round + 1) % checkpointEvery == 0
       // EVERY round truncates the logical plan (LogicalRDD), not just
@@ -284,18 +272,15 @@ object DedupCluster {
       val materialized =
         if (isCut && reliable) Dedup.materializeDetached(step)
         else step.localCheckpoint(false)
-      t = lap("materialize", t)
       // Fixpoint = the canonical edge set is unchanged. Both frames are
       // distinct + identically oriented, so equal counts plus an empty
       // one-directional difference (new ⊆ old) prove set equality —
       // one count job (which also materializes the round) + one
       // anti-join probe, instead of a two-sided diff.
       val newCount = materialized.count()
-      t = lap("count", t)
       val changed = newCount != edgeCount ||
         materialized.join(edges, Seq("src", "dst"), "left_anti")
           .limit(1).count() > 0
-      t = lap("anti-join probe", t)
       if (edges ne pinned) release(edges)
       if (isCut) {
         if (pinned != null) release(pinned)
@@ -305,10 +290,6 @@ object DedupCluster {
       edgeCount = newCount
       converged = !changed
       round += 1
-      if (sys.props.contains("graft.cc.debug"))
-        System.err.println(f"[cc] alternating round $round: " +
-          f"$edgeCount edges, converged=$converged, " +
-          f"t=${(System.nanoTime() - tInit) / 1e9}%.1f s")
     }
     if (!converged) {
       release(edges)

@@ -51,16 +51,13 @@ object Graph {
     * paid TWO full aggregation exchanges (E rows, then 2·E' rows);
     * this pays one over E rows and the reversals never cross a shuffle.
     *
-    * CONTRACT: endpoints must be non-null. least/greatest skip NULLs,
-    * so a null-endpoint edge (null, x) would canonicalize to the
-    * self-loop (x, x) instead of surviving as a null-bearing row —
-    * filter or fail on null endpoints upstream if the edge source can
-    * carry them (every caller here feeds key columns of relational
-    * fixtures, which are non-null by construction).
+    * Edges with a null endpoint are dropped (least/greatest would turn
+    * (null, x) into the self-loop (x, x)).
     */
   def undirect(edges: DataFrame, srcCol: String, dstCol: String)
       : DataFrame = {
     val canon = edges
+      .filter(col(srcCol).isNotNull && col(dstCol).isNotNull)
       .select(least(col(srcCol), col(dstCol)).as("a"),
         greatest(col(srcCol), col(dstCol)).as("b"))
       .distinct()

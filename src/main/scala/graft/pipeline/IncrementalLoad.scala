@@ -1,18 +1,32 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Relational
 import graft.sources.IO
 
-/** The engine's flagship job: the v2 `upload_data` incremental load
-  * (SURVEY.md §3.2; reference v2/dag:98-122), generalized.
+/** The engine's one load, for both generations of the reference job.
   *
   * One logical plan per run:
   *   watermark(target) → filter source newer-than → project → lineage
   *   literal → null-repair → keep-latest dedup → month-partitioned,
-  *   shard-keyed, sorted write with dynamic partition overwrite.
+  *   shard-keyed, sorted write.
+  *
+  *   - v2 `upload_data` (SURVEY.md §3.2; reference v2/dag:98-122): strict
+  *     watermark, append; duplicates across batches resolve
+  *     ReplacingMergeTree-style at read ([[readDeduped]]).
+  *   - v1 staged shard loads + `REPLACE PARTITION` (SURVEY.md §3.3;
+  *     v1/dag:59-104): `monthTruncatedWatermark = true`, `sourceName = ""`.
+  *     The month-truncated watermark and inclusive filter reload whole
+  *     months, and dynamic partition overwrite replaces them atomically
+  *     through the write's commit protocol. The manual id%2 fan-out
+  *     becomes the scan's own partitions and the staging table
+  *     disappears. The reference's `partitions[0]` iteration bug
+  *     (v1/dag:97) and its unordered LIMIT batch cap are deliberately not
+  *     reproduced (SURVEY.md §7.4). The only step v1 gains is the
+  *     keep-latest dedup, a no-op on a keyed source; the byte-identical
+  *     `pipeline_partition_swap_e2e` oracle row pins that.
   *
   * The reference runs this per table (logs/ab_user/dashboards) with
   * `(table, refresh_field)` parameters (v2/dag:157-168); `Config` is the
@@ -21,7 +35,9 @@ import graft.sources.IO
   * Scale: the watermark is the only driver-side value; everything else is
   * one distributed plan — the incremental filter pushes to the source
   * scan, the dedup window and the write share the shard-key exchange, and
-  * dynamic overwrite touches only the months present in the batch.
+  * dynamic overwrite touches only the months present in the batch. The
+  * source is read once: the row count comes from an observation on the
+  * write itself.
   */
 object IncrementalLoad {
 
@@ -35,10 +51,15 @@ object IncrementalLoad {
       defaults: Map[String, Any] = Map.empty, // §1.4 null repair
       monthTruncatedWatermark: Boolean = false) // v1 (F2) vs v2 (F1)
 
-  /** One incremental run: returns the batch that was written. */
+  /** One incremental run: returns the number of rows written. A missing
+    * or never-written target is a cold start (watermark = the 2000-01-01
+    * epoch, v2/dag:113-114); any other failure to read it fails the load
+    * before the source is touched ([[IO.readParquetIfPresent]]).
+    */
   def run(spark: SparkSession, source: DataFrame, targetPath: String,
-          cfg: Config): DataFrame = {
-    val target = readTargetOrEmpty(spark, targetPath, source)
+          cfg: Config): Long = {
+    val target = IO.readParquetIfPresent(spark, targetPath)
+      .map(_.drop("month")).getOrElse(source.filter(lit(false)))
     val wm =
       if (cfg.monthTruncatedWatermark) Relational.monthWatermark(target, cfg.tsCol)
       else Relational.watermark(target, cfg.tsCol)
@@ -52,13 +73,15 @@ object IncrementalLoad {
       else projected
     val repaired = graft.schema.Schemas.applyDefaults(withSource, cfg.defaults)
     val deduped = Relational.dedupLatest(repaired, Seq(cfg.keyCol), cfg.versionCol)
-    // v2 (strict watermark): batches are disjoint → append, duplicates
-    // across batches resolved ReplacingMergeTree-style at read
-    // (readDeduped). v1 (month watermark): whole months reload → dynamic
-    // partition overwrite makes the re-load idempotent.
-    IO.writeFact(deduped, targetPath, cfg.tsCol, cfg.keyCol,
+    val written = Observation()
+    // v2 (strict watermark): batches are disjoint → append. v1 (month
+    // watermark): whole months reload → dynamic partition overwrite makes
+    // the re-load idempotent.
+    IO.writeFact(deduped.observe(written, count(lit(1)).as("rows")),
+      targetPath, cfg.tsCol, cfg.keyCol,
       overwritePartitions = cfg.monthTruncatedWatermark)
-    deduped
+    // A batch that AQE finds empty at run time reports no `rows` at all.
+    written.get.get("rows").fold(0L)(_.asInstanceOf[Long])
   }
 
   /** Read the target with ReplacingMergeTree read-side semantics: the
@@ -68,23 +91,4 @@ object IncrementalLoad {
   def readDeduped(spark: SparkSession, path: String, keyCol: String,
                   versionCol: String): DataFrame =
     Relational.dedupLatest(spark.read.parquet(path), Seq(keyCol), versionCol)
-
-  /** Cold start: missing/empty target reads as an empty frame with the
-    * source's schema, so the watermark falls back to the 2000-01-01 epoch
-    * (v2/dag:113-114).
-    */
-  def readTargetOrEmpty(spark: SparkSession, path: String,
-                        like: DataFrame): DataFrame =
-    try {
-      val df = spark.read.parquet(path)
-      df.drop("month")
-    } catch {
-      // Missing path surfaces as AnalysisException(PATH_NOT_FOUND) or, on
-      // some Spark builds, a raw FileNotFoundException from the streaming-
-      // sink metadata probe that runs before path resolution.
-      case _: org.apache.spark.sql.AnalysisException =>
-        like.filter(lit(false))
-      case _: java.io.FileNotFoundException =>
-        like.filter(lit(false))
-    }
 }

@@ -24,14 +24,25 @@ object Retention {
     val df = spark.read.parquet(path).drop("month")
     val kept = Relational.applyRetention(df, tsCol,
       lit(anchor.toString).cast("timestamp"), months)
+    rewriteAndSwap(spark, path)(
+      IO.writeFact(kept, _, tsCol, keyCol, overwritePartitions = false))
+    spark.read.parquet(path)
+  }
+
+  /** The one crash-safe rewrite sequence behind [[rewrite]], [[compact]]
+    * and [[optimizeFinal]]: drop any partial tmp left by a run that
+    * crashed mid-write (so the write never mixes generations), `write`
+    * a fresh tmp — the write action materializes fully from the live
+    * dir before the swap touches it — carry the replay markers over,
+    * then promote tmp through [[swapInto]].
+    */
+  private def rewriteAndSwap(spark: SparkSession, path: String)(
+      write: String => Unit): Unit = {
     val tmp = path + TmpSuffix
-    // Drop any partial tmp left by a run that crashed mid-write, so the
-    // append below never mixes generations.
     fsOf(spark, tmp).delete(hPath(tmp), true)
-    IO.writeFact(kept, tmp, tsCol, keyCol, overwritePartitions = false)
+    write(tmp)
     copyMarkers(spark, path, tmp)
     swapInto(spark, tmp, path)
-    spark.read.parquet(path)
   }
 
   /** Streaming replay markers (_graft_commits, EventStream.factSink /
@@ -73,14 +84,8 @@ object Retention {
     if (nBefore == 0) return (0, 0) // nothing to rewrite — leave the dir be
     val n = math.max(1, math.ceil(
       parts.map(_.getLen).sum.toDouble / targetFileBytes).toInt)
-    val tmp = path + TmpSuffix
-    fsOf(spark, tmp).delete(hPath(tmp), true)
-    // the write action fully materializes from the live dir before the
-    // swap touches anything
-    spark.read.parquet(path).repartition(n)
-      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(tmp)
-    copyMarkers(spark, path, tmp)
-    swapInto(spark, tmp, path)
+    rewriteAndSwap(spark, path)(spark.read.parquet(path).repartition(n)
+      .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(_))
     (nBefore, n)
   }
 
@@ -111,13 +116,8 @@ object Retention {
     val df = spark.read.parquet(path)
     val merged = Relational.dedupLatest(df, Seq("month", keyCol),
       versionCol, tieBreak).drop("month")
-    val tmp = path + TmpSuffix
-    fsOf(spark, tmp).delete(hPath(tmp), true)
-    // append-mode into a FRESH tmp dir: the write action materializes
-    // fully from the live dir before the swap touches it
-    IO.writeFact(merged, tmp, tsCol, keyCol, overwritePartitions = false)
-    copyMarkers(spark, path, tmp)
-    swapInto(spark, tmp, path)
+    rewriteAndSwap(spark, path)(
+      IO.writeFact(merged, _, tsCol, keyCol, overwritePartitions = false))
     spark.read.parquet(path)
   }
 

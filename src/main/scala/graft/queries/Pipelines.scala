@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.multimodal.{Mp4, Multimodal, Webm}
-import graft.pipeline.{IncrementalLoad, PartitionSwapLoad}
+import graft.pipeline.IncrementalLoad
 
 /** End-to-end pipeline queries: each runs a whole composed job (write +
   * read-back) inside a scratch directory and returns the final target
@@ -81,8 +81,12 @@ object Pipelines {
     "pipeline_partition_swap_e2e" -> ((s, dir) => {
       val src = Tables.load(s, dir, "events")
       val path = scratch("graft_swap")
-      PartitionSwapLoad.run(s, src, path, "ts", "event_id")
-      PartitionSwapLoad.run(s, src, path, "ts", "event_id") // idempotent re-run
+      val cfg = IncrementalLoad.Config(
+        keyCol = "event_id", tsCol = "ts", versionCol = "ts",
+        projection = eventCols, sourceName = "",
+        monthTruncatedWatermark = true)
+      IncrementalLoad.run(s, src, path, cfg)
+      IncrementalLoad.run(s, src, path, cfg) // idempotent re-run
       s.read.parquet(path).drop("month")
         .select(eventCols.map(col): _*)
         .orderBy("event_id")

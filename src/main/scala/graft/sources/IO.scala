@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Sources and sinks — SURVEY.md §2.1 / §2.9.
@@ -180,6 +180,27 @@ object IO {
       .partitionBy("month")
       .mode(if (overwritePartitions) SaveMode.Overwrite else SaveMode.Append)
       .parquet(path)
+
+  /** The one cold-start rule: a parquet table that was never written
+    * reads as `None`. Only the "nothing written yet" conditions count as
+    * absent — a missing path (`PATH_NOT_FOUND`, or a raw
+    * `FileNotFoundException` from the streaming-sink metadata probe
+    * that some Spark builds run before path resolution) and a directory
+    * with no data files to infer a schema from
+    * (`UNABLE_TO_INFER_SCHEMA`, what a zero-row write leaves). Any other
+    * failure — a conflicting or corrupt schema, a path that is not a
+    * table — propagates: reading it as empty would reset a watermark to
+    * the epoch or switch off cross-batch dedup.
+    */
+  def readParquetIfPresent(spark: SparkSession, path: String): Option[DataFrame] =
+    try Some(spark.read.parquet(path))
+    catch {
+      case e: AnalysisException if AbsentConditions.contains(e.getCondition) =>
+        None
+      case _: java.io.FileNotFoundException => None
+    }
+
+  private val AbsentConditions = Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
 
   /** S3: list live month partitions of a fact table — the system.parts
     * metadata scan (v1/dag:88-94) becomes a partition-column distinct,

@@ -126,21 +126,16 @@ object DocStream {
   def readCorpus(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path).drop("ingest_batch")
 
-  /** First-batch bootstrap: an index that does not exist yet reads as
-    * empty. ONLY the two conditions that mean "nothing written yet"
-    * (missing path, or a present-but-empty directory Spark can't infer a
-    * schema from) are treated that way — a corrupt index, a wrong-schema
-    * index, or a mistyped `indexPath` that resolves to something else
-    * must fail loudly, because silently returning empty would disable
-    * cross-batch dedup and let duplicates into the corpus.
+  /** First-batch bootstrap: an index that was never written reads as
+    * empty ([[graft.sources.IO.readParquetIfPresent]]). Anything else —
+    * a corrupt index, a wrong-schema index, or a mistyped `indexPath`
+    * that resolves to something else — fails loudly, because silently
+    * returning empty would disable cross-batch dedup and let duplicates
+    * into the corpus.
     */
-  private val EmptyIndexConditions =
-    Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-
   private def readIndexOrEmpty(spark: SparkSession, indexPath: String,
                                like: DataFrame, batchId: Long): DataFrame =
-    try {
-      val idx = spark.read.parquet(indexPath)
+    graft.sources.IO.readParquetIfPresent(spark, indexPath) match {
       // exclude this batch's own partition: a crashed earlier attempt of
       // the SAME batch may have landed signatures, and a replay that saw
       // its own fingerprints would drop every document as a duplicate.
@@ -148,18 +143,9 @@ object DocStream {
       // `ingest_batch` column — every row there predates this batch by
       // construction, so it reads as all-prior-batches instead of
       // crashing the ingest on UNRESOLVED_COLUMN.
-      if (idx.columns.contains("ingest_batch"))
-        idx.filter(col("ingest_batch") =!= lit(batchId))
-          .drop("ingest_batch")
-      else idx
-    } catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition != null &&
-            EmptyIndexConditions.contains(e.getCondition) =>
-        like.filter(lit(false))
-      // Some Spark builds throw this raw from the streaming-sink metadata
-      // probe before path resolution gets to raise PATH_NOT_FOUND.
-      case _: java.io.FileNotFoundException =>
-        like.filter(lit(false))
+      case Some(idx) if idx.columns.contains("ingest_batch") =>
+        idx.filter(col("ingest_batch") =!= lit(batchId)).drop("ingest_batch")
+      case Some(idx) => idx
+      case None => like.filter(lit(false))
     }
 }

@@ -101,23 +101,14 @@ object VecStream {
   }
 
   /** Streamed index rows for the query-side union; empty when nothing
-    * has streamed yet. Only the two "nothing written yet" conditions
-    * read as empty ([[DocStream]] rule) — anything else fails loudly.
+    * has streamed yet ([[graft.sources.IO.readParquetIfPresent]]) —
+    * anything else fails loudly.
     */
   def readStreamed(spark: SparkSession, streamPath: String,
                    indexTable: String): DataFrame =
-    try spark.read.parquet(streamPath).drop("ingest_batch")
-    catch {
-      case e: org.apache.spark.sql.AnalysisException
-          if e.getCondition != null &&
-            Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
-              .contains(e.getCondition) =>
-        spark.table(indexTable).limit(0)
-      // raw form of PATH_NOT_FOUND on some Spark builds (streaming-sink
-      // metadata probe runs before path resolution)
-      case _: java.io.FileNotFoundException =>
-        spark.table(indexTable).limit(0)
-    }
+    graft.sources.IO.readParquetIfPresent(spark, streamPath)
+      .map(_.drop("ingest_batch"))
+      .getOrElse(spark.table(indexTable).limit(0))
 
   /** Top-k over base + streamed rows uniformly. */
   def topK(spark: SparkSession, indexTable: String, streamPath: String,

@@ -71,6 +71,15 @@ class GraphSpec extends SparkSpec {
     assert(c == a)
   }
 
+  test("undirect drops edges with a null endpoint instead of turning " +
+      "them into self-loops") {
+    val raw = Seq[(java.lang.Long, java.lang.Long)](
+      (1L, 2L), (null, 3L), (4L, null), (null, null))
+    val got = Graph.undirect(raw.toDF("src", "dst"), "src", "dst")
+      .as[(Long, Long)].collect().toSet
+    assert(got == Set((1L, 2L), (2L, 1L)))
+  }
+
   test("mutualKnnEdges + knnClusters: planted blobs separate, the " +
       "outlier stays a singleton, and non-reciprocal neighbors are cut") {
     // two tight 5-point blobs on orthogonal axes + one far outlier;

@@ -127,6 +127,43 @@ class JdbcSpec extends SparkSpec {
       == fact.count())
   }
 
+  test("a v2 delta load extracts each new source row once and returns " +
+      "what it wrote") {
+    val furl = "jdbc:derby:memory:graftfeed;create=true"
+    def insert(ids: Range, day: Int): Unit = {
+      val conn = DriverManager.getConnection(furl)
+      val st = conn.createStatement()
+      ids.foreach(i => st.executeUpdate(
+        f"INSERT INTO feed VALUES ($i, TIMESTAMP('2024-01-$day%02d 12:00:00'), ${i % 7})"))
+      st.close(); conn.close()
+    }
+    locally {
+      val conn = DriverManager.getConnection(furl)
+      conn.createStatement().executeUpdate(
+        "CREATE TABLE feed (id INT NOT NULL, dttm TIMESTAMP NOT NULL, v INT)")
+      conn.close()
+    }
+    insert(0 until 40, 3)
+    val target = tempDir("feed")
+    val job = graft.pipeline.Dag.TableJob("feed",
+      graft.sources.IO.readJdbc(spark, furl, "feed", "id", 0, 100, 4,
+        new Properties()),
+      target, graft.pipeline.IncrementalLoad.Config("id", "dttm", "dttm",
+        Seq("id", "dttm", "v"), sourceName = ""))
+    assert(graft.pipeline.Dag.runV2(spark, Seq(job)) == Map("feed" -> 40L))
+    val n = 9
+    insert(40 until 40 + n, 5)
+    val m = RunMetrics.attach(spark)
+    try {
+      var loaded = Map.empty[String, Long]
+      val s = m.measure(spark) { loaded = graft.pipeline.Dag.runV2(spark, Seq(job)) }
+      assert(loaded == Map("feed" -> n.toLong))
+      // the only other scan is the watermark's read of the 40-row target
+      assert(s.inputRows - 40 == n, s.rows.map(r => r.name -> r.inputRows))
+    } finally spark.sparkContext.removeSparkListener(m)
+    assert(spark.read.parquet(target).count() == 40 + n)
+  }
+
   // --- second dialect: DuckDB (PostgreSQL-flavored SQL) ----------------
   // The reference's federated source is Postgres
   // (v2/sql/create_external_tables.sql:14); Derby's quoting and type

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.pipeline.{DictionaryRefresh, IncrementalLoad, PartitionSwapLoad, Retention}
+import graft.pipeline.{DictionaryRefresh, IncrementalLoad, Retention}
 
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -36,11 +36,39 @@ class PipelineSpec extends SparkSpec {
 
   test("partition swap load is idempotent (M1 REPLACE PARTITION semantics)") {
     val path = tempDir("swap")
-    PartitionSwapLoad.run(spark, events, path, "ts", "event_id")
+    val v1 = cfg.copy(sourceName = "", monthTruncatedWatermark = true)
+    IncrementalLoad.run(spark, events, path, v1)
     val c1 = spark.read.parquet(path).count()
-    PartitionSwapLoad.run(spark, events, path, "ts", "event_id")
+    IncrementalLoad.run(spark, events, path, v1)
     val c2 = spark.read.parquet(path).count()
     assert(c1 == events.count() && c2 == c1)
+  }
+
+  test("cold start: a missing target and a target holding only _SUCCESS " +
+      "both load the whole source") {
+    val n = events.count()
+    assert(IncrementalLoad.run(spark, events, tempDir("cold_missing"), cfg) == n)
+    val marked = tempDir("cold_success")
+    new java.io.File(marked).mkdirs()
+    assert(new java.io.File(marked, "_SUCCESS").createNewFile())
+    assert(IncrementalLoad.run(spark, events, marked, cfg) == n)
+    assert(spark.read.parquet(marked).count() == n)
+  }
+
+  test("a target that exists but cannot be read fails the load and " +
+      "writes nothing (no silent cold start)") {
+    val path = tempDir("unreadable")
+    // a file whose columns differ only in case: the read fails with
+    // COLUMN_ALREADY_EXISTS, which is not "nothing written yet"
+    spark.conf.set("spark.sql.caseSensitive", "true")
+    try Seq((1L, 2L)).toDF("a", "A").write.parquet(path)
+    finally spark.conf.unset("spark.sql.caseSensitive")
+    def files = new java.io.File(path).list().toSeq.sorted
+    val before = files
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      IncrementalLoad.run(spark, events, path, cfg))
+    assert(e.getCondition == "COLUMN_ALREADY_EXISTS", e.getMessage)
+    assert(files == before)
   }
 
   test("retention rewrite drops rows older than the horizon") {
