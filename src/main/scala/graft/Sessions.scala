@@ -43,10 +43,11 @@ object Sessions {
 
   def start(b: SparkSession.Builder): SparkSession = {
     val s = b.getOrCreate()
-    // Reliable checkpoint target (operators materializing small results —
-    // Dedup/DedupCluster — checkpoint here so they survive executor loss
-    // and stay out of the CacheManager). On a cluster, point this at
-    // durable shared storage (HDFS/S3) instead of a local tmp dir.
+    // Every operator lineage cut is a reliable `Dataset.checkpoint()`
+    // written here (materialized small results and the iterative loops'
+    // periodic cuts), and a session without this directory fails at its
+    // first cut. On a cluster it must be durable shared storage
+    // (HDFS/S3), not a local tmp dir, so cuts survive executor loss.
     if (s.sparkContext.getCheckpointDir.isEmpty)
       s.sparkContext.setCheckpointDir(
         java.nio.file.Files.createTempDirectory("graft_ckpt").toString)

@@ -293,7 +293,7 @@ object CorpusBuildJob {
     val budgeted =
       if (tokenBudgetPerSource > 0)
         Sampling.tokenBudgetSelectBy(
-          Dedup.materializeDetached(quotaed)
+          quotaed.checkpoint()
             .join(priors.select("doc_id", "prior"), Seq("doc_id"))
             .withColumn("__toks", TextFunctions.tokenCount(col("text"))),
           "source", "__toks", tokenBudgetPerSource,

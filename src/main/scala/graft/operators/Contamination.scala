@@ -48,8 +48,8 @@ object Contamination {
       // sizes); persist so the corpus is shingled and split only once
       val ev = sh.filter(col("is_eval"))
         .select(col(idCol).as("eval_id"), col("shingle")).persist()
-      val out = Dedup.materializeDetached(
-        pairsFrom(sh, idCol, minContainment, Some(ev), maxTrainDf))
+      val out = pairsFrom(sh, idCol, minContainment, Some(ev), maxTrainDf)
+        .checkpoint()
       ev.unpersist(blocking = false)
       out
     }

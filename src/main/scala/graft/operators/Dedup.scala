@@ -18,7 +18,7 @@ import graft.functions.{Rounding, TextFunctions}
   *
   * Cache discipline: operators that pin big intermediates (the exploded
   * shingle index, signatures) materialize their small result eagerly
-  * (localCheckpoint) and release the intermediates before returning, so
+  * (`checkpoint()`) and release the intermediates before returning, so
   * a long session running many dedup queries never accumulates stale
   * cached shingle sets (and never trips CacheManager same-plan
   * cross-talk between queries).
@@ -26,15 +26,12 @@ import graft.functions.{Rounding, TextFunctions}
 object Dedup {
 
   /** Eagerly materialize `result` (a SMALL pair/signature set — orders
-    * of magnitude below the corpus), then release the big pinned
-    * intermediates. When the session has a checkpoint dir configured
-    * (graft.Sessions sets one; production points it at reliable
-    * HDFS/S3), this is a RELIABLE checkpoint: the result survives
-    * executor loss (dynamic allocation, spot kills), the failure mode
-    * localCheckpoint could not recover from at 1000 executors. Without a
-    * checkpoint dir it degrades to localCheckpoint — acceptable only in
-    * single-JVM local runs, where losing an executor is losing the app.
-    * Either way the returned frame's plan is DETACHED from the original
+    * of magnitude below the corpus) with a reliable `checkpoint()`, then
+    * release the big pinned intermediates. The result survives executor
+    * loss (dynamic allocation, spot kills), and the eager checkpoint
+    * computes the plan once in its own write job — no persist is needed
+    * to avoid a second evaluation (DedupSpec pins one evaluation per
+    * input row). The returned frame's plan is DETACHED from the original
     * query tree, so the CacheManager can never substitute it into a
     * later structurally-equal dedup query — each query's cost stays its
     * own (no cross-query cache borrowing, honest benchmarks, stable
@@ -47,26 +44,10 @@ object Dedup {
     * still computed once per action via ReuseExchange.
     */
   private def scoped(caches: Seq[DataFrame])(result: DataFrame): DataFrame = {
-    val out = materializeDetached(result)
+    val out = result.checkpoint()
     caches.foreach(_.unpersist(blocking = false))
     out
   }
-
-  /** Shared by the dedup tier: eager, plan-detached materialization.
-    * The reliable path persists first so the checkpoint WRITE streams
-    * from the cached blocks — without the persist, RDD checkpointing
-    * re-runs the whole DAG a second time to write it (the classic 2×
-    * compute trap). The transient cache entry is dropped immediately,
-    * so nothing stays in the CacheManager.
-    */
-  private[graft] def materializeDetached(result: DataFrame): DataFrame =
-    if (result.sparkSession.sparkContext.getCheckpointDir.isDefined) {
-      val cached = result.persist()
-      cached.count()
-      val out = cached.checkpoint(eager = true)
-      cached.unpersist(blocking = false)
-      out
-    } else result.localCheckpoint(eager = true)
 
   /** Document-frequency cap for inverted-index candidate generation —
     * the systemic guard for the one thing that kills every

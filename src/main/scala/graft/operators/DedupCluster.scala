@@ -14,40 +14,34 @@ import org.apache.spark.sql.functions._
   * graph diameter — for near-dup graphs that is tiny (dup clusters are
   * cliques or short chains), so the default cap of 10 shuffle rounds
   * covers any realistic corpus; the loop exits early at fixpoint via a
-  * cheap count of changed labels. Every `checkpointEvery` rounds the
-  * label frame's lineage is cut — reliable checkpoint when the session
-  * has a checkpoint dir, localCheckpoint fallback otherwise — so
-  * lineage stays bounded on chain-shaped graphs (the
-  * iterative-algorithm hazard at scale), and
-  * hitting the round budget without convergence raises — silent
-  * mislabeling is worse than a loud retry with a higher cap.
+  * cheap count of changed labels. Every [[CutEvery]] rounds the label
+  * frame's lineage is cut with a reliable `checkpoint()`, so lineage
+  * stays bounded on chain-shaped graphs (the iterative-algorithm hazard
+  * at scale), and hitting the round budget without convergence raises
+  * — silent mislabeling is worse than a loud retry with a higher cap.
   */
 object DedupCluster {
 
+  /** Rounds between reliable lineage cuts in both component loops. */
+  private val CutEvery = 3
+
   /** Fully releases a discarded loop frame. `Dataset.unpersist` only
-    * drops CacheManager entries — for a `localCheckpoint`ed frame the
-    * data lives as RDD-level blocks behind a `LogicalRDD`, which plain
-    * unpersist does NOT free, so each round's edge blocks would linger
-    * until ContextCleaner GC (unbounded storage growth across rounds on
-    * a long loop).
+    * drops CacheManager entries — for a `localCheckpoint`ed frame (the
+    * per-round plan cut in [[componentsAlternating]], the one
+    * `localCheckpoint` in the operator tier) the data lives as RDD-level
+    * blocks behind a `LogicalRDD`, which plain unpersist does NOT free,
+    * so each round's edge blocks would linger until ContextCleaner GC
+    * (unbounded storage growth across rounds on a long loop).
     *
     * The RDD arm fires ONLY when the released frame IS the checkpoint —
     * i.e. its analyzed plan ROOT is the `LogicalRDD`. Matching anywhere
     * deeper in the tree would free blocks the frame merely REFERENCES:
-    * a plain-persisted loop round built on top of a pinned
-    * localCheckpoint embeds the pin's `LogicalRDD` in its own plan, so
-    * a tree-walk release of that round would delete the pin's blocks —
-    * the only copy, lineage already truncated — while later rounds
-    * still recompute from it (found by the round-12 review; under cache
-    * eviction or executor loss the recompute dies on missing checkpoint
-    * blocks). For plain-persist frames the root is an operator node and
-    * the RDD arm is a no-op, as intended.
-    *
-    * This is also the REQUIRED release path for frames the loops RETURN
-    * (components / componentsAlternating hand back localCheckpoints in
-    * non-reliable mode): a caller-side bare `unpersist` leaves their
-    * RDD blocks pinned until ContextCleaner GC — exactly the leak class
-    * this helper exists to close.
+    * a persisted frame built on top of a local checkpoint embeds its
+    * `LogicalRDD` in its own plan, so a tree-walk release of that frame
+    * would delete the checkpoint's blocks — the only copy, lineage
+    * already truncated — while other frames still read from it (found
+    * by the round-12 review). For plain-persist frames the root is an
+    * operator node and the RDD arm is a no-op, as intended.
     */
   private[graft] def release(df: DataFrame): Unit = {
     df.unpersist(blocking = false)
@@ -69,26 +63,12 @@ object DedupCluster {
     *         is persisted; callers own its unpersist once consumed.
     */
   def componentsWithStatus(docs: DataFrame, idCol: String, pairs: DataFrame,
-                           maxRounds: Int = 10,
-                           checkpointEvery: Int = 3): (DataFrame, Boolean) = {
-    val spark = docs.sparkSession
-    // Periodic lineage cut: RELIABLE checkpoint when the session has a
-    // checkpoint dir (blocks live on reliable storage, survive executor
-    // loss, predecessors releasable immediately — the right mode on a
-    // cluster); localCheckpoint fallback for single-JVM runs. The
-    // fallback stores its data AS executor cache blocks, so unpersisting
-    // a localCheckpointed round would delete the only copy that later
-    // persist()ed (recomputable-through-lineage) rounds recompute FROM —
-    // after an executor loss their recomputation dies on missing
-    // checkpoint blocks. The most recent local cut therefore stays
-    // `pinned` until the next cut supersedes it.
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
+                           maxRounds: Int = 10): (DataFrame, Boolean) = {
     val edges = pairs.select(col("id_a").as("src"), col("id_b").as("dst"))
       .unionByName(pairs.select(col("id_b").as("src"), col("id_a").as("dst")))
       .distinct().persist()
     var labels = docs.select(col(idCol).as("id"), col(idCol).as("cluster_id"))
       .persist()
-    var pinned: DataFrame = null
     var round = 0
     var converged = false
     while (round < maxRounds && !converged) {
@@ -104,40 +84,22 @@ object DedupCluster {
             .as("cluster_id"))
       // bound the lineage: a plain persist still drags the full
       // round-by-round plan behind it; the periodic cut truncates it.
-      // Cut rounds skip persist(): both checkpoint flavors already
-      // materialize the data, and persisting on top would register a
-      // second full copy with the CacheManager.
-      val isCut = (round + 1) % checkpointEvery == 0
+      // Cut rounds skip persist(): the checkpoint already materializes
+      // the data, and persisting on top would register a second full
+      // copy with the CacheManager.
       val materialized =
-        if (isCut && reliable) Dedup.materializeDetached(step)
-        else if (isCut) step.localCheckpoint(false)
+        if ((round + 1) % CutEvery == 0) step.checkpoint()
         else step.persist()
       val changed = materialized
         .join(labels.withColumnRenamed("cluster_id", "prev"), Seq("id"))
         .filter(col("cluster_id") =!= col("prev")).count()
-      if (labels ne pinned) release(labels)
-      if (isCut) {
-        // the new cut truncates lineage at `materialized`; nothing
-        // downstream can reach the previous cut's blocks any more
-        if (pinned != null) release(pinned)
-        pinned = if (reliable) null else materialized
-      }
+      release(labels)
       labels = materialized
       converged = changed == 0
       round += 1
     }
     edges.unpersist(blocking = false)
-    if (pinned == null || (pinned eq labels)) (labels, converged)
-    else {
-      // The returned frame must not depend on a pin the caller doesn't
-      // know about: cut its lineage (streams from labels' still-cached
-      // blocks, so no recompute), then release both loop frames. The
-      // caller releases the returned frame as documented.
-      val out = labels.localCheckpoint(eager = true)
-      release(labels)
-      release(pinned)
-      (out, converged)
-    }
+    (labels, converged)
   }
 
   /** As [[componentsWithStatus]], but failing loudly when the round
@@ -186,9 +148,8 @@ object DedupCluster {
     * replica). Per round: two map-side-combinable min-aggregations and
     * one broadcast-free equi-join each, over the CURRENT edge set
     * (total work O(m·rounds)); `distinct()` after each star keeps the
-    * frame at most one entry per (src,dst). The same
-    * `checkpointEvery`-round lineage cut as label propagation bounds
-    * plan depth.
+    * frame at most one entry per (src,dst). The same [[CutEvery]]-round
+    * reliable cut as label propagation bounds lineage.
     *
     * THE DEFAULT for every consumer of an unbounded pair frame
     * (semDedup, leakage-safe split, kNN clusters, canonicalize, the
@@ -207,11 +168,7 @@ object DedupCluster {
     *         caller owns the unpersist.
     */
   def componentsAlternating(docs: DataFrame, idCol: String, pairs: DataFrame,
-                            maxRounds: Int = 20,
-                            checkpointEvery: Int = 3): DataFrame = {
-    val spark = docs.sparkSession
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-
+                            maxRounds: Int = 20): DataFrame = {
     // Canonical undirected edge set, self-loops dropped: (src > dst)
     // orientation is small-star's input form and a stable dedup key.
     var edges = pairs
@@ -254,13 +211,11 @@ object DedupCluster {
         .distinct()
     }
 
-    var pinned: DataFrame = null
     var round = 0
     var edgeCount = edges.count()
     var converged = edgeCount == 0
     while (round < maxRounds && !converged) {
       val step = smallStar(largeStar(edges))
-      val isCut = (round + 1) % checkpointEvery == 0
       // EVERY round truncates the logical plan (LogicalRDD), not just
       // the reliable cuts: persist() caches data but keeps the full
       // self-referencing star lineage in the LOGICAL tree, and Catalyst
@@ -268,9 +223,9 @@ object DedupCluster {
       // the round-3 checkpoint paid ~115 s of pure driver-side
       // analysis on a 279-edge graph (found by the round-11 probe).
       // localCheckpoint is the plan cut; the reliable checkpoint every
-      // `checkpointEvery` rounds remains the durability cut.
+      // `CutEvery` rounds is the durability cut.
       val materialized =
-        if (isCut && reliable) Dedup.materializeDetached(step)
+        if ((round + 1) % CutEvery == 0) step.checkpoint()
         else step.localCheckpoint(false)
       // Fixpoint = the canonical edge set is unchanged. Both frames are
       // distinct + identically oriented, so equal counts plus an empty
@@ -281,11 +236,7 @@ object DedupCluster {
       val changed = newCount != edgeCount ||
         materialized.join(edges, Seq("src", "dst"), "left_anti")
           .limit(1).count() > 0
-      if (edges ne pinned) release(edges)
-      if (isCut) {
-        if (pinned != null) release(pinned)
-        pinned = if (reliable) null else materialized
-      }
+      release(edges)
       edges = materialized
       edgeCount = newCount
       converged = !changed
@@ -293,7 +244,6 @@ object DedupCluster {
     }
     if (!converged) {
       release(edges)
-      if (pinned != null && (pinned ne edges)) release(pinned)
       throw new IllegalStateException(
         s"DedupCluster.componentsAlternating: no fixpoint after " +
           s"$maxRounds rounds — star contraction needs ~log2(n) rounds, " +
@@ -305,17 +255,15 @@ object DedupCluster {
       .join(edges.select(col("src").as("id"), col("dst").as("lbl")),
         Seq("id"), "left")
       .select(col("id"), coalesce(col("lbl"), col("id")).as("cluster_id"))
-    val out = Dedup.materializeDetached(labels)
+    val out = labels.checkpoint()
     release(edges)
-    if (pinned != null && (pinned ne edges)) release(pinned)
     out
   }
 
   /** One row per cluster: the canonical doc (min id) + member count.
     * The per-doc labels frame is released here once the (tiny) aggregate
-    * is materialized — reliable checkpoint when the session has a
-    * checkpoint dir, localCheckpoint fallback for single-JVM runs — so
-    * no cache entry outlives the call and the returned plan can never be
+    * is materialized with a reliable `checkpoint()`, so no cache entry
+    * outlives the call and the returned plan can never be
     * CacheManager-substituted into a later query.
     *
     * DEFAULT path is the alternating-star components: its round count
@@ -343,19 +291,12 @@ object DedupCluster {
                               maxRounds: Int = 10): DataFrame =
     manifestOf(components(docs, idCol, pairs, maxRounds), idCol)
 
-  /** [[canonicalize]]'s explicit alternating-star spelling — kept for
-    * callers that want the algorithm named at the call site; identical
-    * to the default. */
-  def canonicalizeAlternating(docs: DataFrame, idCol: String,
-                              pairs: DataFrame): DataFrame =
-    manifestOf(componentsAlternating(docs, idCol, pairs), idCol)
-
   private def manifestOf(labels: DataFrame, idCol: String): DataFrame = {
     val agg = labels
       .groupBy("cluster_id")
       .agg(count(lit(1)).as("n_members"))
       .withColumnRenamed("cluster_id", idCol)
-    val out = Dedup.materializeDetached(agg)
+    val out = agg.checkpoint()
     release(labels)
     out
   }

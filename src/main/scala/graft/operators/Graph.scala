@@ -14,10 +14,9 @@ import org.apache.spark.sql.functions._
   * is join(ranks on src) → map-side-combinable sum on dst → left join
   * back to the node set — three key-partitioned exchanges, no
   * broadcast of anything unbounded, no driver-side data beyond the
-  * node COUNT. Rank-frame lineage is cut every `checkpointEvery`
-  * rounds exactly like [[DedupCluster.componentsWithStatus]] (reliable
-  * checkpoint when a dir is set, else localCheckpoint), so a 50-round
-  * run does not build a 150-stage plan.
+  * node COUNT. Rank-frame lineage is cut with a reliable `checkpoint()`
+  * every [[CutEvery]] rounds, like [[DedupCluster.componentsWithStatus]],
+  * so a 50-round run does not build a 150-stage plan.
   *
   * Cross-engine exactness (the property the `graph_pagerank` oracle
   * hash-checks): per-edge contributions `damping · rank / deg` are
@@ -36,6 +35,10 @@ import org.apache.spark.sql.functions._
   * [[undirect]]) when conservation matters.
   */
 object Graph {
+
+  /** Iterations between reliable lineage cuts in the PageRank loops,
+    * and half-steps between them in [[hits]]. */
+  private val CutEvery = 4
 
   /** Contribution quantum: 10⁻¹⁴ rank units per integer step. */
   val Unit14: Double = 1.0e14
@@ -163,7 +166,7 @@ object Graph {
             "raise maxEval deliberately")
       }
     }
-    val out = Dedup.materializeDetached(silhouetteScores(v, v))
+    val out = silhouetteScores(v, v).checkpoint()
     v.unpersist(blocking = false)
     out
   }
@@ -264,67 +267,20 @@ object Graph {
     * (parallel edges count double — sometimes wanted, usually not).
     */
   def pageRank(edges: DataFrame, srcCol: String, dstCol: String,
-               iters: Int, damping: Double = 0.85,
-               checkpointEvery: Int = 4): DataFrame = {
+               iters: Int, damping: Double = 0.85): DataFrame = {
     require(iters >= 1 && damping > 0 && damping < 1)
-    val spark = edges.sparkSession
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    // One persisted (src, dst, deg) frame feeds every iteration. Its
-    // partitioning is already the right one at scale with NO explicit
-    // repartition: past the broadcast threshold the degree join is a
-    // src-keyed shuffle join, so the cache holds hash(src) partitions
-    // and each iteration's rank join moves only the O(|V|) rank frame;
-    // below the threshold ranks itself broadcasts and nothing edge-
-    // scale moves either way. Round-13 measured the alternatives and
-    // kept this AQE-planned shape: a forced repartition(src) +
-    // SHUFFLE_HASH-hinted rank join left sf10 shuffle bytes UNCHANGED
-    // (8.26 GB — the per-iteration shuffle is the map-side-combined
-    // partial-sum exchange of the dst aggregation, not the join) and
-    // DOUBLED wall-clock (129.9 s -> 257.6 s); see PLANS.md round 13.
-    val ed = e.join(deg, "src").persist()
-    // node set from the CACHED (src, dst, deg) frame, not from `e`: the
-    // inner degree join keeps every edge row (deg covers every src), so
-    // the id set is identical — but deriving it from `e` re-evaluated
-    // the whole upstream edge pipeline (join + undirect distinct) twice
-    // more per action; reading `ed` also populates its cache in the
-    // same first action, so the edge pipeline runs exactly once.
-    val nodes = ed.select(col("src").as("id"))
-      .unionByName(ed.select(col("dst").as("id")))
-      .distinct().persist()
+    val ed = degreeEdges(edges, srcCol, dstCol)
+    val nodes = nodesOf(ed).persist()
     val n = nodes.count()
     require(n > 0, "empty edge frame")
-    var ranks = nodes.withColumn("rank", lit(1.0 / n))
-    var pinned: DataFrame = null
-    for (k <- 1 to iters) {
-      val contrib = ed.join(ranks, ed("src") === ranks("id"))
-        .select(ed("dst"),
-          floor(lit(damping) * col("rank") / col("deg") * lit(Unit14)
-            + lit(0.5)).as("c"))
-      val inc = contrib.groupBy("dst").agg(sum(col("c")).as("inc"))
-      val next = nodes.join(inc, nodes("id") === inc("dst"), "left")
-        .select(nodes("id"),
-          (lit((1.0 - damping) / n) +
-            coalesce(col("inc").cast("double") / lit(Unit14), lit(0.0)))
-            .as("rank"))
-      ranks =
-        if (k % checkpointEvery == 0 || k == iters) {
-          val cut = if (reliable) next.checkpoint()
-                    else next.localCheckpoint()
-          if (!reliable) { // see DedupCluster on why the cut stays pinned
-            // release() (not bare unpersist): a localCheckpoint's data
-            // lives as RDD blocks a Dataset.unpersist does not free
-            if (pinned != null) DedupCluster.release(pinned)
-            pinned = cut
-          }
-          cut
-        } else next
-    }
+    val ranks = rankLoop(ed,
+      nodes.withColumn("tele", lit((1.0 - damping) / n)),
+      nodes.withColumn("rank", lit(1.0 / n)), iters, damping)
     ed.unpersist()
     nodes.unpersist()
     ranks
   }
+
   /** Personalized (seed-biased) PageRank: the teleport mass returns to
     * the SEED set instead of uniformly, so rank measures link
     * proximity to the seeds — the topic-conditioned crawl prior
@@ -339,58 +295,85 @@ object Graph {
     */
   def personalizedPageRank(edges: DataFrame, srcCol: String,
                            dstCol: String, seeds: DataFrame, iters: Int,
-                           damping: Double = 0.85,
-                           checkpointEvery: Int = 4): DataFrame = {
+                           damping: Double = 0.85): DataFrame = {
     require(iters >= 1 && damping > 0 && damping < 1)
-    val spark = edges.sparkSession
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
-    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
-    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val ed = e.join(deg, "src").persist()
-    // same node-set-from-cache derivation as pageRank (inner degree
-    // join keeps every edge row, so the id set is unchanged)
-    val nodes = ed.select(col("src").as("id"))
-      .unionByName(ed.select(col("dst").as("id")))
-      .distinct()
+    val ed = degreeEdges(edges, srcCol, dstCol)
     val seedIds = seeds.select(col(seeds.columns.head).as("id")).distinct()
     val ns = seedIds.count()
     require(ns > 0, "empty seed set")
     // per-node teleport column, persisted once: (1−d)/|S| on seeds,
     // 0 elsewhere — the only place this loop differs from pageRank
-    val tele = nodes
+    val tele = nodesOf(ed)
       .join(seedIds.withColumn("__s", lit(1)), Seq("id"), "left")
       .select(col("id"),
         when(col("__s").isNotNull, lit((1.0 - damping) / ns))
           .otherwise(lit(0.0)).as("tele"))
       .persist()
     require(tele.count() > 0, "empty edge frame")
-    var ranks = tele.select(col("id"),
-      when(col("tele") > 0, lit(1.0 / ns)).otherwise(lit(0.0)).as("rank"))
-    var pinned: DataFrame = null
+    val ranks = rankLoop(ed, tele, tele.select(col("id"),
+      when(col("tele") > 0, lit(1.0 / ns)).otherwise(lit(0.0)).as("rank")),
+      iters, damping)
+    ed.unpersist()
+    tele.unpersist()
+    ranks
+  }
+
+  /** The persisted (src, dst, deg) frame both PageRank loops re-read
+    * every iteration. Its partitioning is already the right one at
+    * scale with NO explicit repartition: past the broadcast threshold
+    * the degree join is a src-keyed shuffle join, so the cache holds
+    * hash(src) partitions and each iteration's rank join moves only the
+    * O(|V|) rank frame; below the threshold ranks itself broadcasts and
+    * nothing edge-scale moves either way. Round-13 measured the
+    * alternatives and kept this AQE-planned shape: a forced
+    * repartition(src) + SHUFFLE_HASH-hinted rank join left sf10 shuffle
+    * bytes UNCHANGED (8.26 GB — the per-iteration shuffle is the
+    * map-side-combined partial-sum exchange of the dst aggregation, not
+    * the join) and DOUBLED wall-clock (129.9 s -> 257.6 s); see PLANS.md
+    * round 13.
+    */
+  private def degreeEdges(edges: DataFrame, srcCol: String,
+                          dstCol: String): DataFrame = {
+    val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
+    val deg = e.groupBy("src").agg(count(lit(1)).as("deg"))
+    e.join(deg, "src").persist()
+  }
+
+  /** The node set, from the CACHED (src, dst, deg) frame rather than the
+    * raw edges: the inner degree join keeps every edge row (deg covers
+    * every src), so the id set is identical — but deriving it upstream
+    * re-evaluated the whole edge pipeline (join + undirect distinct)
+    * twice more per action; reading `ed` also populates its cache in
+    * the same first action, so the edge pipeline runs exactly once.
+    */
+  private def nodesOf(ed: DataFrame): DataFrame =
+    ed.select(col("src").as("id"))
+      .unionByName(ed.select(col("dst").as("id")))
+      .distinct()
+
+  /** The fixed-iteration rank loop shared by [[pageRank]] and
+    * [[personalizedPageRank]]: `base` is (id, tele) for every node, the
+    * teleport mass each node receives per iteration, and `ranks0` the
+    * starting (id, rank). Each iteration is rank = tele + Σ quantized
+    * incoming contributions; every [[CutEvery]]-th and the last
+    * iteration cut lineage with a reliable `checkpoint()`.
+    */
+  private def rankLoop(ed: DataFrame, base: DataFrame, ranks0: DataFrame,
+                       iters: Int, damping: Double): DataFrame = {
+    var ranks = ranks0
     for (k <- 1 to iters) {
       val contrib = ed.join(ranks, ed("src") === ranks("id"))
         .select(ed("dst"),
           floor(lit(damping) * col("rank") / col("deg") * lit(Unit14)
             + lit(0.5)).as("c"))
       val inc = contrib.groupBy("dst").agg(sum(col("c")).as("inc"))
-      val next = tele.join(inc, tele("id") === inc("dst"), "left")
-        .select(tele("id"),
+      val next = base.join(inc, base("id") === inc("dst"), "left")
+        .select(base("id"),
           (col("tele") +
             coalesce(col("inc").cast("double") / lit(Unit14), lit(0.0)))
             .as("rank"))
-      ranks =
-        if (k % checkpointEvery == 0 || k == iters) {
-          val cut = if (reliable) next.checkpoint()
-                    else next.localCheckpoint()
-          if (!reliable) {
-            if (pinned != null) DedupCluster.release(pinned)
-            pinned = cut
-          }
-          cut
-        } else next
+      ranks = if (k % CutEvery == 0 || k == iters) next.checkpoint() else next
     }
-    ed.unpersist()
-    tele.unpersist()
     ranks
   }
 
@@ -486,7 +469,7 @@ object Graph {
     *
     * Scale shape is pageRank's: one persisted edge frame, per
     * iteration two join→map-side-combinable-sum passes plus a
-    * broadcast one-row total; lineage cut every `checkpointEvery`
+    * broadcast one-row total; reliable lineage cut every [[CutEvery]]
     * half-steps. The iteration state carries only ACTIVE nodes (raw
     * sum > 0): a node absent from a reduction quantizes to 0 and
     * contributes nothing to the next one, so the all-nodes frame is
@@ -495,11 +478,8 @@ object Graph {
     * them, and no per-step left join exists at all.
     */
   def hits(edges: DataFrame, srcCol: String, dstCol: String,
-           iters: Int, checkpointEvery: Int = 4,
-           maxDegree: Long = 8000000L): DataFrame = {
+           iters: Int, maxDegree: Long = 8000000L): DataFrame = {
     require(iters >= 1)
-    val spark = edges.sparkSession
-    val reliable = spark.sparkContext.getCheckpointDir.isDefined
     val e = edges.select(col(srcCol).as("src"), col(dstCol).as("dst"))
       .persist()
     // ONE exchange serves both the node set and the degree guard: total
@@ -531,10 +511,6 @@ object Graph {
             "maxDegree only below ~9.2e6, the Long.Max/1e12 bound)")
       }
     }
-    // the final join reads BOTH families' last cuts, so two pins stay
-    // alive: unpersisting only cuts older than the previous one
-    var pinnedPrev: DataFrame = null
-    var pinnedLast: DataFrame = null
     var cuts = 0
     // L1-normalize the raw sums against the broadcast one-row total
     // and re-quantize — active rows only; cut lineage periodically
@@ -549,15 +525,7 @@ object Graph {
             col("t").cast("double") * lit(Unit12) + lit(0.5))
             .as(outCol))
       cuts += 1
-      if (force || cuts % checkpointEvery == 0) {
-        val cut = if (reliable) next.checkpoint() else next.localCheckpoint()
-        if (!reliable) {
-          if (pinnedPrev != null) DedupCluster.release(pinnedPrev)
-          pinnedPrev = pinnedLast
-          pinnedLast = cut
-        }
-        cut
-      } else next
+      if (force || cuts % CutEvery == 0) next.checkpoint() else next
     }
     // One cached copy of the edge frame serves BOTH half-step join keys
     // (src for the authority sum, dst for the hub sum), and the per-

@@ -225,7 +225,7 @@ object Profile {
         graft.functions.Rounding.pround(
           abs(col("kmv_est") - col("n_exact")).cast("double") /
             col("n_exact"), 6).as("rel_err"))
-    val detached = Dedup.materializeDetached(out)
+    val detached = out.checkpoint()
     dv.unpersist(blocking = false)
     detached
   }
@@ -349,7 +349,7 @@ object Profile {
         graft.functions.Rounding.pround(
           abs(col("inter_est") - col("n_exact")).cast("double") /
             col("n_exact"), 6).as("rel_err"))
-    val detached = Dedup.materializeDetached(out)
+    val detached = out.checkpoint()
     bk.unpersist(blocking = false)
     dv.unpersist(blocking = false)
     detached
@@ -440,7 +440,7 @@ object Profile {
       .select(col(groupCol), col(tokensCol).as("n_tokens"),
         pround(col("p"), 6).as("p"), col("desired_tokens"),
         col("alloc_tokens"), col("epochs"), col("shortfall_tokens"))
-    val detached = Dedup.materializeDetached(out)
+    val detached = out.checkpoint()
     nonEmpty.unpersist(blocking = false)
     detached
   }
@@ -521,7 +521,7 @@ object Profile {
   def centroidDrift(df: DataFrame, groupCol: String, vecCol: String)
       : DataFrame = {
     val (out, perGroup) = centroidDriftLazy(df, groupCol, vecCol)
-    val detached = Dedup.materializeDetached(out)
+    val detached = out.checkpoint()
     perGroup.unpersist(blocking = false)
     detached
   }
@@ -599,7 +599,7 @@ object Profile {
         transform(sequence(lit(0), lit(Hll.M - 1)),
           i => coalesce(element_at(col("__regs"), i), lit(0))))
       .select("g", "hll")
-    val pinned = Dedup.materializeDetached(regs)
+    val pinned = regs.checkpoint()
     val nGroups = pinned.count()
     if (nGroups > maxGroups)
       throw new IllegalStateException(
@@ -753,7 +753,7 @@ object Profile {
         pround(abs(col("hll_est") - col("n_exact")) /
           col("n_exact").cast("double"), 6).as("rel_err"),
         col("hll_mode"))
-    val detached = Dedup.materializeDetached(out)
+    val detached = out.checkpoint()
     dv.unpersist(blocking = false)
     detached
   }

@@ -118,7 +118,7 @@ object Retrieval {
     if (materialize) {
       // same cache discipline as the dedup tier: materialize the small
       // result detached from the plan, then release the pinned index
-      val out = Dedup.materializeDetached(ranked)
+      val out = ranked.checkpoint()
       tf.unpersist(blocking = false)
       out
     } else ranked

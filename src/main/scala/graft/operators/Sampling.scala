@@ -93,10 +93,10 @@ object Sampling {
     // round budget is the wrong contract for a split that must never
     // fail on a bigger corpus (policy set by the sf1.0 sweep finding)
     val labels = DedupCluster.componentsAlternating(docs, idCol, pairs)
-    val out = Dedup.materializeDetached(
-      docs.join(labels, docs(idCol) === labels("id"))
-        .select(docs(idCol), col("cluster_id"),
-          splitLabel(col("cluster_id"), val256, test256).as("split")))
+    val out = docs.join(labels, docs(idCol) === labels("id"))
+      .select(docs(idCol), col("cluster_id"),
+        splitLabel(col("cluster_id"), val256, test256).as("split"))
+      .checkpoint()
     DedupCluster.release(labels)
     out
   }

@@ -1458,7 +1458,7 @@ object Similarity {
         .agg(min_by(col("cand_id"), struct(col("csim"), col("cand_id")))
           .as("keep_id"))
         .select(col("keep_id"))
-      val out = Dedup.materializeDetached(keep)
+      val out = keep.checkpoint()
       DedupCluster.release(labels)
       newBatch.join(out, col(idCol) === col("keep_id"), "left_semi")
     } finally {
@@ -1592,7 +1592,7 @@ object Similarity {
         .agg(min_by(col("cand_id"), struct(col("csim"), col("cand_id")))
           .as("keep_id"))
         .select(col("keep_id"))
-      val out = Dedup.materializeDetached(keep)
+      val out = keep.checkpoint()
       DedupCluster.release(labels)
       out
     } finally cells.unpersist(blocking = false)

@@ -90,8 +90,7 @@ object Skyline {
             "Pareto-optimal. Reduce the criterion set, pre-filter the " +
             "input, or raise maxGlobalRows only with the executor memory " +
             "to back a single-task pass of that size.")
-      Dedup.materializeDetached(
-        local.repartition(1).mapPartitions(localSkyline _)(enc))
+      local.repartition(1).mapPartitions(localSkyline _)(enc).checkpoint()
     } finally local.unpersist(blocking = false)
   }
 }

@@ -96,7 +96,9 @@ object SpanDedup {
   /** The corpus with duplicated spans excised: (idCol, clean_text,
     * n_removed). Documents with no spans pass through verbatim; a
     * document that was ALL duplicate comes back as the empty string,
-    * not a lost row.
+    * not a lost row. A null text has no words and so no spans: it comes
+    * back as `clean_text = null`, `n_removed = 0` (SpanDedupSpec pins
+    * it).
     *
     * Excision is per-ROW codegen, not a word-level relational pass: the
     * few spans of each doc aggregate into one array row, join the

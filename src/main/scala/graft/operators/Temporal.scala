@@ -217,10 +217,10 @@ object Temporal {
       Seq(keyCol, tsCol), tsCol, tieBreak)
       .select(col(keyCol).as("__k"), col(tsCol).as("__t"),
         col(valueCol).as("__v"))
-    val bounds = Dedup.materializeDetached(
-      obs.groupBy("__k")
-        .agg(date_trunc(alignUnit, min(col("__t"))).as("t0"),
-          max(col("__t")).as("t1")))
+    val bounds = obs.groupBy("__k")
+      .agg(date_trunc(alignUnit, min(col("__t"))).as("t0"),
+        max(col("__t")).as("t1"))
+      .checkpoint()
     val worstSpanUs = bounds
       .agg(max(unix_micros(col("t1")) - unix_micros(col("t0")))).first()
     if (!worstSpanUs.isNullAt(0)) {

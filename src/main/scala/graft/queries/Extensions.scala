@@ -1590,7 +1590,7 @@ object Extensions {
       val d = t(s, dir, "documents")
       val pairs = Dedup.minHashLshPairs(d, "doc_id", "text",
         ShingleN, Bands, RowsPerBand)
-      DedupCluster.canonicalizeAlternating(d, "doc_id", pairs)
+      DedupCluster.canonicalize(d, "doc_id", pairs)
         .orderBy("doc_id")
     }),
 
@@ -2270,14 +2270,9 @@ object Extensions {
       // (vec_id, dim, value) — materialized ONCE: the covariance probe
       // below references this frame four times (means, both self-join
       // sides, the n_vecs count), and the lazy form re-ran the whole
-      // train+project arc per reference. With a checkpoint dir set (the
-      // Bench/Verify sessions always set one) the materialization is a
-      // reliable checkpoint with the interim cache released; without
-      // one, materializeDetached falls back to localCheckpoint, whose
-      // blocks live until RDD GC — acceptable for this bounded
-      // (n_vecs·dim)-row frame, but not a "cache released" guarantee
-      val long = graft.operators.Dedup.materializeDetached(
-        sweepQueries("emb_zca_whiten")(s, dir))
+      // train+project arc per reference. A reliable checkpoint: computed
+      // once, no cache entry left behind
+      val long = sweepQueries("emb_zca_whiten")(s, dir).checkpoint()
       val means = long.groupBy(col("dim").as("mi"))
         .agg(avg(col("value")).as("mu_i"))
       val b = long.select(col("vec_id").as("vid2"), col("dim").as("j"),

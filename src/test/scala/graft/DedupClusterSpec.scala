@@ -58,45 +58,44 @@ class DedupClusterSpec extends SparkSpec {
       DedupCluster.componentsWithStatus(docs, "doc_id", pairs, maxRounds = 3)
     assert(!converged)
     partial.unpersist()
-    // with enough rounds (checkpointing kicks in every 3) it converges
+    // with enough rounds (a reliable cut every 3) it converges, and once
+    // the caller releases the labels no round's cache entry is left
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
     val (full, ok) =
       DedupCluster.componentsWithStatus(docs, "doc_id", pairs, maxRounds = 15)
     assert(ok)
     assert(full.as[(Long, Long)].collect().toMap.values.toSet == Set(1L))
+    DedupCluster.release(full)
+    assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
+      "loop rounds are leaking cache entries")
   }
 
-  test("localCheckpoint fallback: converges across cut rounds and leaves " +
-      "no cache entries behind") {
-    // SparkSpec sets a checkpoint dir, so the reliable path is the
-    // default; drop it for this test to exercise the fallback, whose
-    // pinned-checkpoint lifetime rules are the subtle part (a local
-    // checkpoint's blocks ARE its storage — releasing one too early
-    // strands every later persisted round's recompute path).
+  test("a session without a checkpoint dir fails the first lineage cut " +
+      "loudly") {
+    // Every cut is a reliable checkpoint(); with the directory unset the
+    // loops must fail rather than fall back to executor-local storage.
+    // The 11-hop chain reaches the propagation loop's third-round cut,
+    // and the star path cuts at its third round or its final labels.
     val sc = spark.sparkContext
     val saved = sc.getCheckpointDir
     sc.setCheckpointDir(null)
     try {
-      val before = sc.getPersistentRDDs.keySet
       val docs = (1L to 12L).toDF("doc_id")
       val pairs = (1L to 11L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-      // 11-hop chain: 12 rounds spanning four checkpointEvery=3 cuts,
-      // ending on a non-cut round so the final-labels lineage cut runs
-      val (labels, ok) = DedupCluster.componentsWithStatus(
-        docs, "doc_id", pairs, maxRounds = 15, checkpointEvery = 3)
-      assert(ok)
-      assert(labels.as[(Long, Long)].collect().toMap.values.toSet == Set(1L))
-      labels.unpersist(blocking = true)
-      // Cache hygiene, scoped to THIS call (the session is shared across
-      // suites, so a global-emptiness check would flag other suites'
-      // fixtures). Every CacheManager-registered round frame must be
-      // released synchronously; only localCheckpoint block sets (the four
-      // cuts + the final lineage cut) may linger until the ContextCleaner
-      // GCs their now-unreachable RDDs. A leak of the ~8 persist()ed
-      // rounds would blow well past that bound.
-      val lingering = sc.getPersistentRDDs.keySet -- before
-      assert(lingering.size <= 5,
-        s"fallback mode left ${lingering.size} persistent RDDs — " +
-          "loop rounds are leaking cache entries")
+      val failures = Seq(
+        intercept[Exception] {
+          DedupCluster.componentsWithStatus(docs, "doc_id", pairs,
+            maxRounds = 15)
+        },
+        intercept[Exception] {
+          DedupCluster.canonicalize(docs, "doc_id", pairs)
+        })
+      for (e <- failures)
+        assert(Iterator.iterate[Throwable](e)(_.getCause)
+          .takeWhile(_ != null).flatMap(t => Option(t.getMessage))
+          .exists(_.contains("Checkpoint directory has not been set")),
+          s"unexpected failure: $e")
     } finally saved.foreach(sc.setCheckpointDir)
   }
 

@@ -29,6 +29,41 @@ class DedupSpec extends SparkSpec {
     assert(!pairs.exists(p => p._1 == 4L || p._2 == 4L))
   }
 
+  test("a materialized pair set evaluates each input row once and leaves " +
+      "the persistent RDDs and the CacheManager as they were") {
+    // the cut is a bare eager checkpoint(): its write job computes the
+    // plan once, so no persist in front of it is needed to avoid a
+    // second evaluation
+    val sc = spark.sparkContext
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    val evals = sc.longAccumulator("text_evals")
+    val counted = udf { (s: String) => evals.add(1); s }
+    // RDD-backed, so the optimizer cannot fold the UDF into a local
+    // relation on the driver (once per planning, not per row)
+    val src = spark.createDataFrame(docs.rdd, docs.schema)
+      .withColumn("text", counted(col("text")))
+    val rddsBefore = sc.getPersistentRDDs.keySet
+    val cacheWasEmpty = cache.isEmpty
+    val pairs = Dedup.ngramJaccardPairs(src, "doc_id", "text", 3, 0.3)
+    val n = docs.count()
+    assert(evals.value == n, "the cut evaluated its input more than once")
+    assert(pairs.select("id_a", "id_b").as[(Long, Long)].collect()
+      .contains((1L, 2L)))
+    assert(evals.value == n, "reading the cut re-evaluated its input")
+    assert(sc.getPersistentRDDs.keySet == rddsBefore)
+    assert(cache.isEmpty == cacheWasEmpty)
+    // the same holds for a bare checkpoint() over an uncached aggregate
+    val keys = sc.longAccumulator("key_evals")
+    val key = udf { (i: Long) => keys.add(1); i % 7 }
+    val agg = spark.range(2000).groupBy(key(col("id")).as("k"))
+      .agg(count(lit(1)).as("n")).checkpoint()
+    assert(keys.value == 2000L)
+    assert(agg.agg(sum(col("n"))).as[Long].head() == 2000L)
+    assert(keys.value == 2000L)
+    assert(sc.getPersistentRDDs.keySet == rddsBefore)
+  }
+
   test("minhash estimate error: an exact-dup pair estimates 1.0 with " +
       "zero error, every error is bounded by 1, est matches agreement") {
     val got = Dedup.minHashEstimateError(docs, "doc_id", "text", 3, 4, 3)

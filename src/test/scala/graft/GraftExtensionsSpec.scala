@@ -147,4 +147,16 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(found == Seq("listener" -> Seq("RunMetrics.scala"),
       "bus" -> Seq("GraftAccess.scala"), "sleep" -> Seq()))
   }
+
+  test("source guard: one lineage cut — reliable checkpoint(), no " +
+      "fallback, no cut-cadence parameter") {
+    val found = Seq(
+      "dir" -> calling("src/main/scala", """getCheckpointDir"""),
+      "gone" -> calling("src/main/scala",
+        """materializeDetached|checkpointEvery"""),
+      // the star loop's per-round plan cut and the streaming detach
+      "local" -> calling("src/main/scala", """localCheckpoint"""))
+    assert(found == Seq("dir" -> Seq("Sessions.scala"), "gone" -> Seq(),
+      "local" -> Seq("DedupCluster.scala", "Pipelines.scala")))
+  }
 }

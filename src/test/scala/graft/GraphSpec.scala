@@ -311,12 +311,12 @@ class GraphSpec extends SparkSpec {
     assert(math.abs(got.values.map(_._2).sum - 1.0) < 1e-9)
   }
 
-  test("lineage cuts: a 12-iteration run completes and matches the " +
-      "reference simulation with checkpointEvery=3") {
+  test("lineage cuts: a 12-iteration run crosses three reliable cuts and " +
+      "matches the reference simulation") {
     val raw = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L), (1L, 3L))
     val e = Graph.undirect(raw.toDF("src", "dst"), "src", "dst")
-    val got = Graph.pageRank(e, "src", "dst", iters = 12,
-      checkpointEvery = 3).as[(Long, Double)].collect().toMap
+    val got = Graph.pageRank(e, "src", "dst", iters = 12)
+      .as[(Long, Double)].collect().toMap
     val want = simulate(
       raw.flatMap { case (a, b) => Seq((a, b), (b, a)) }.distinct,
       iters = 12, damping = 0.85)

@@ -829,7 +829,7 @@ class PlanAuditSpec extends SparkSpec {
     assert(!pj.contains("CartesianProduct"), pj.take(3000))
     assert(pj.contains("BroadcastHashJoin"),
       "JS totals frame lost its broadcast:\n" + pj.take(2000))
-    // kmvIntersect returns a DETACHED frame (materializeDetached — the
+    // kmvIntersect returns a DETACHED frame (a reliable checkpoint — the
     // kmvEstimate convention: internal persists freed, lineage
     // severed), so its downstream plan is exactly one ExistingRDD scan
     // — the join shapes live inside the operator and are covered by

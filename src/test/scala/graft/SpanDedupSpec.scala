@@ -57,6 +57,19 @@ class SpanDedupSpec extends SparkSpec {
       (6L, "", 3L)))
   }
 
+  test("removeDupSpans: a null text comes back as clean_text = null, " +
+    "n_removed = 0, next to an excised duplicate") {
+    val withNull = Seq[(Long, String)](
+      (1L, "d1 d2 d3"), (2L, null), (3L, "d1 d2 d3")).toDF("doc_id", "text")
+    val out = SpanDedup.removeDupSpans(withNull, "doc_id", "text", 3)
+      .orderBy("doc_id")
+      .as[(Long, Option[String], Long)].collect().toSeq
+    assert(out == Seq(
+      (1L, Some("d1 d2 d3"), 0L),
+      (2L, None, 0L),
+      (3L, Some(""), 3L)))
+  }
+
   test("a boilerplate gram in every doc stays linear: join rows equal " +
     "occurrence count, never occurrence pairs") {
     // 200 docs all containing the same 3-word run — the hot-gram case.
