@@ -141,7 +141,7 @@ object ScaleStress {
       sources.IO.writeFact(big, s"$tmp/events", "ts", "event_id",
         overwritePartitions = false)
     }
-    val bigEv = spark.read.parquet(s"$tmp/events").drop("month")
+    val bigEv = sources.IO.readParquet(spark, s"$tmp/events").drop("month")
 
     time("flagship incremental load (cold start, 2M rows)") {
       val cfg = pipeline.IncrementalLoad.Config(

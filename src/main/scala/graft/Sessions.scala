@@ -38,6 +38,10 @@ object Sessions {
       // silently depend on the engine default changing per profile
       .config("spark.sql.ansi.enabled", "true")
       .config("spark.sql.parquet.compression.codec", "zstd")
+      // parquet TIMESTAMP(NANOS) (the events fixture's `ts`) reads as a
+      // long of nanos, which `Tables.load` converts; Spark 4 refuses it
+      // otherwise
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.files.maxPartitionBytes", s"${256 * 1024 * 1024}")
       .config("spark.ui.enabled", "false")
 

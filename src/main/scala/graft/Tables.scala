@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.sources.IO
+
 /** Fixture-table access (TESTDATA.md). Every `SparkEntry.queries` entry
   * receives a scale-factor directory and reads one parquet per table, the
   * same files the DuckDB oracle sees.
@@ -19,15 +21,18 @@ object Tables {
 
   /** Columns stored as parquet TIMESTAMP(NANOS), which Spark's vectorized
     * reader rejects outright. They are read as nanos-since-epoch longs
-    * (legacy conf) and converted to microsecond timestamps — the fixture
-    * values are µs-precision, and DuckDB (the oracle) also truncates
-    * nanos to its µs timestamps, so parity is exact.
+    * (`spark.sql.legacy.parquet.nanosAsLong`, pinned in
+    * [[Sessions.builder]]) and converted to microsecond timestamps — the
+    * fixture values are µs-precision, and DuckDB (the oracle) also
+    * truncates nanos to its µs timestamps, so parity is exact.
     */
   private val nanosCols: Map[String, Seq[String]] = Map("events" -> Seq("ts"))
 
-  def load(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = spark.read.parquet(s"$sfDir/$name.parquet")
+  def load(spark: SparkSession, sfDir: String, name: String): DataFrame =
+    normalize(name, IO.readParquet(spark, s"$sfDir/$name.parquet"))
+
+  /** The fixture fixups on the raw parquet read of table `name`. */
+  private[graft] def normalize(name: String, df: DataFrame): DataFrame = {
     val deNanosed = nanosCols.getOrElse(name, Nil).foldLeft(df) { (d, c) =>
       if (d.schema(c).dataType == LongType)
         // `div` = integer division: raw nanos exceed double precision (2^53)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.functions.TextFunctions
 import graft.operators._
+import graft.sources.IO
 
 /** The training-data tier end to end: one driver program that takes a
   * raw document corpus to training-ready artifacts, every stage an
@@ -178,10 +179,10 @@ object CorpusBuildJob {
         .parquet(s"$outDir/media_audio_windows")
       DedupCluster.release(labels)
 
-      val canonicalRows = spark.read
-        .parquet(s"$outDir/media_canonical").count()
-      val audioWindowRows = spark.read
-        .parquet(s"$outDir/media_audio_windows").count()
+      val canonicalRows =
+        IO.readParquet(spark, s"$outDir/media_canonical").count()
+      val audioWindowRows =
+        IO.readParquet(spark, s"$outDir/media_audio_windows").count()
       MediaCounts(rawMedia, hashedImages, canonicalRows, audioWindowRows)
     } finally {
       hashes.unpersist(blocking = false)
@@ -352,7 +353,7 @@ object CorpusBuildJob {
     chunks.write.mode("overwrite").parquet(s"$outDir/chunks")
     qaReport.write.mode("overwrite").parquet(s"$outDir/qa_report")
 
-    val trainN = spark.read.parquet(s"$outDir/corpus")
+    val trainN = IO.readParquet(spark, s"$outDir/corpus")
       .filter(col("split") === "train").count()
     val evalN = eval_.count()
     relined.unpersist(blocking = false)

@@ -90,5 +90,5 @@ object IncrementalLoad {
     */
   def readDeduped(spark: SparkSession, path: String, keyCol: String,
                   versionCol: String): DataFrame =
-    Relational.dedupLatest(spark.read.parquet(path), Seq(keyCol), versionCol)
+    Relational.dedupLatest(IO.readParquet(spark, path), Seq(keyCol), versionCol)
 }

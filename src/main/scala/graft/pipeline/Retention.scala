@@ -21,12 +21,12 @@ object Retention {
   def rewrite(spark: SparkSession, path: String, tsCol: String,
               keyCol: String, months: Int,
               anchor: java.sql.Timestamp): DataFrame = {
-    val df = spark.read.parquet(path).drop("month")
+    val df = IO.readParquet(spark, path).drop("month")
     val kept = Relational.applyRetention(df, tsCol,
       lit(anchor.toString).cast("timestamp"), months)
     rewriteAndSwap(spark, path)(
       IO.writeFact(kept, _, tsCol, keyCol, overwritePartitions = false))
-    spark.read.parquet(path)
+    IO.readParquet(spark, path)
   }
 
   /** The one crash-safe rewrite sequence behind [[rewrite]], [[compact]]
@@ -84,7 +84,7 @@ object Retention {
     if (nBefore == 0) return (0, 0) // nothing to rewrite — leave the dir be
     val n = math.max(1, math.ceil(
       parts.map(_.getLen).sum.toDouble / targetFileBytes).toInt)
-    rewriteAndSwap(spark, path)(spark.read.parquet(path).repartition(n)
+    rewriteAndSwap(spark, path)(IO.readParquet(spark, path).repartition(n)
       .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(_))
     (nBefore, n)
   }
@@ -113,12 +113,12 @@ object Retention {
   def optimizeFinal(spark: SparkSession, path: String, tsCol: String,
                     keyCol: String, versionCol: String,
                     tieBreak: Seq[String] = Nil): DataFrame = {
-    val df = spark.read.parquet(path)
+    val df = IO.readParquet(spark, path)
     val merged = Relational.dedupLatest(df, Seq("month", keyCol),
       versionCol, tieBreak).drop("month")
     rewriteAndSwap(spark, path)(
       IO.writeFact(merged, _, tsCol, keyCol, overwritePartitions = false))
-    spark.read.parquet(path)
+    IO.readParquet(spark, path)
   }
 
   private val TmpSuffix = "__retained"

@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.Tables
 import graft.multimodal.{Mp4, Multimodal, Webm}
 import graft.pipeline.IncrementalLoad
+import graft.sources.IO
 
 /** End-to-end pipeline queries: each runs a whole composed job (write +
   * read-back) inside a scratch directory and returns the final target
@@ -87,7 +88,7 @@ object Pipelines {
         monthTruncatedWatermark = true)
       IncrementalLoad.run(s, src, path, cfg)
       IncrementalLoad.run(s, src, path, cfg) // idempotent re-run
-      s.read.parquet(path).drop("month")
+      IO.readParquet(s, path).drop("month")
         .select(eventCols.map(col): _*)
         .orderBy("event_id")
     }),
@@ -144,11 +145,11 @@ object Pipelines {
         factPath, "ts", "event_id", overwritePartitions = false)
       gated.filter(col("status") === "quarantine")
         .select(eventCols.map(col): _*).write.parquet(qPath)
-      s.read.parquet(factPath).drop("month")
+      IO.readParquet(s, factPath).drop("month")
         .select(eventCols.map(col): _*)
         .withColumn("status", lit("ok"))
         .unionByName(
-          s.read.parquet(qPath).select(eventCols.map(col): _*)
+          IO.readParquet(s, qPath).select(eventCols.map(col): _*)
             .withColumn("status", lit("quarantine")))
         .orderBy("event_id")
     }),
@@ -173,13 +174,13 @@ object Pipelines {
       val base = scratch("graft_rollup")
       Rollup.aggregateState(b1, keys, "value", "user_id", RollupK)
         .write.parquet(s"$base/g1")
-      Rollup.merge(Seq(s.read.parquet(s"$base/g1"),
+      Rollup.merge(Seq(IO.readParquet(s, s"$base/g1"),
         Rollup.aggregateState(b2, keys, "value", "user_id", RollupK)),
         keys, RollupK).write.parquet(s"$base/g2")
-      Rollup.merge(Seq(s.read.parquet(s"$base/g2"),
+      Rollup.merge(Seq(IO.readParquet(s, s"$base/g2"),
         Rollup.aggregateState(b3, keys, "value", "user_id", RollupK)),
         keys, RollupK).write.parquet(s"$base/g3")
-      Rollup.finalizeState(s.read.parquet(s"$base/g3"), keys, RollupK)
+      Rollup.finalizeState(IO.readParquet(s, s"$base/g3"), keys, RollupK)
         .orderBy("event_type", "day")
     }),
 
@@ -204,13 +205,13 @@ object Pipelines {
       val base = scratch("graft_funnel_rollup")
       Rollup.aggregateFunnelState(b1, keys, "ts", "event_type", FunnelSteps)
         .write.parquet(s"$base/g1")
-      Rollup.mergeFunnelStates(Seq(s.read.parquet(s"$base/g1"),
+      Rollup.mergeFunnelStates(Seq(IO.readParquet(s, s"$base/g1"),
         Rollup.aggregateFunnelState(b2, keys, "ts", "event_type",
           FunnelSteps)), keys).write.parquet(s"$base/g2")
-      Rollup.mergeFunnelStates(Seq(s.read.parquet(s"$base/g2"),
+      Rollup.mergeFunnelStates(Seq(IO.readParquet(s, s"$base/g2"),
         Rollup.aggregateFunnelState(b3, keys, "ts", "event_type",
           FunnelSteps)), keys).write.parquet(s"$base/g3")
-      Rollup.finalizeFunnel(s.read.parquet(s"$base/g3"), keys,
+      Rollup.finalizeFunnel(IO.readParquet(s, s"$base/g3"), keys,
         FunnelSteps, FunnelWindowSec)
         .orderBy("user_id", "day")
     }),
@@ -236,13 +237,13 @@ object Pipelines {
       val k = 32
       Rollup.aggregateTopKState(b1, keys, col("event_type"), k)
         .write.parquet(s"$base/g1")
-      Rollup.mergeTopKStates(Seq(s.read.parquet(s"$base/g1"),
+      Rollup.mergeTopKStates(Seq(IO.readParquet(s, s"$base/g1"),
         Rollup.aggregateTopKState(b2, keys, col("event_type"), k)),
         keys, k).write.parquet(s"$base/g2")
-      Rollup.mergeTopKStates(Seq(s.read.parquet(s"$base/g2"),
+      Rollup.mergeTopKStates(Seq(IO.readParquet(s, s"$base/g2"),
         Rollup.aggregateTopKState(b3, keys, col("event_type"), k)),
         keys, k).write.parquet(s"$base/g3")
-      Rollup.finalizeTopK(s.read.parquet(s"$base/g3"), keys, 3)
+      Rollup.finalizeTopK(IO.readParquet(s, s"$base/g3"), keys, 3)
         .withColumn("rnk", col("rnk").cast("long"))
         .orderBy("user_id", "day", "rnk")
     }),
@@ -266,15 +267,15 @@ object Pipelines {
       val base = scratch("graft_cm_rollup")
       Rollup.aggregateCmState(b1, keys, col("term"), CmDepth, CmWidth)
         .write.parquet(s"$base/g1")
-      Rollup.mergeCmStates(Seq(s.read.parquet(s"$base/g1"),
+      Rollup.mergeCmStates(Seq(IO.readParquet(s, s"$base/g1"),
         Rollup.aggregateCmState(b2, keys, col("term"), CmDepth, CmWidth)),
         keys, CmDepth, CmWidth).write.parquet(s"$base/g2")
-      Rollup.mergeCmStates(Seq(s.read.parquet(s"$base/g2"),
+      Rollup.mergeCmStates(Seq(IO.readParquet(s, s"$base/g2"),
         Rollup.aggregateCmState(b3, keys, col("term"), CmDepth, CmWidth)),
         keys, CmDepth, CmWidth).write.parquet(s"$base/g3")
       val probe = toks.groupBy("term").agg(count(lit(1)).as("gn"))
         .orderBy(col("gn").desc, col("term")).limit(CmProbeN)
-      Rollup.finalizeCm(s.read.parquet(s"$base/g3"), keys, probe,
+      Rollup.finalizeCm(IO.readParquet(s, s"$base/g3"), keys, probe,
         "term", CmDepth, CmWidth)
         .orderBy("source", "term")
     }),
@@ -296,13 +297,13 @@ object Pipelines {
       val base = scratch("graft_q_rollup")
       Rollup.aggregateQuantileState(b1, keys, col("value"), 0.0, 10.0, 100)
         .write.parquet(s"$base/g1")
-      Rollup.mergeQuantileStates(Seq(s.read.parquet(s"$base/g1"),
+      Rollup.mergeQuantileStates(Seq(IO.readParquet(s, s"$base/g1"),
         Rollup.aggregateQuantileState(b2, keys, col("value"), 0.0, 10.0,
           100)), keys).write.parquet(s"$base/g2")
-      Rollup.mergeQuantileStates(Seq(s.read.parquet(s"$base/g2"),
+      Rollup.mergeQuantileStates(Seq(IO.readParquet(s, s"$base/g2"),
         Rollup.aggregateQuantileState(b3, keys, col("value"), 0.0, 10.0,
           100)), keys).write.parquet(s"$base/g3")
-      Rollup.finalizeQuantile(s.read.parquet(s"$base/g3"), keys,
+      Rollup.finalizeQuantile(IO.readParquet(s, s"$base/g3"), keys,
         Seq(0.5, 0.9, 0.99), 0.0, 10.0, 100)
         .orderBy("event_type", "q")
     }),
@@ -413,7 +414,7 @@ object Pipelines {
             .write.mode("append").parquet(target)
         }.start()
       q.awaitTermination()
-      s.read.parquet(target).orderBy("event_id")
+      IO.readParquet(s, target).orderBy("event_id")
     }),
 
     // S7: CSV bulk load with the reference dialect (header, ';', NULL
@@ -428,7 +429,7 @@ object Pipelines {
       val path = scratch("graft_zorder")
       graft.sources.IO.writeZOrdered(e, path, Seq("user_id", "value"),
         bits = 4, numFiles = 8)
-      s.read.parquet(path).orderBy("event_id")
+      IO.readParquet(s, path).orderBy("event_id")
     }),
 
     "csv_bulk_roundtrip" -> ((s, dir) => {

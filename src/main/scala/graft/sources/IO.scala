@@ -1,7 +1,14 @@
 package graft.sources
 
-import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.parquet.format.converter.ParquetMetadataConverter
+import org.apache.parquet.hadoop.{Footer, ParquetFileWriter}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat,
+  ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Sources and sinks — SURVEY.md §2.1 / §2.9.
   *
@@ -181,33 +188,86 @@ object IO {
       .mode(if (overwritePartitions) SaveMode.Overwrite else SaveMode.Append)
       .parquet(path)
 
+  /** The engine's one parquet reader: `spark.read.parquet(path)` with
+    * the schema taken from one footer read on the driver, so resolving
+    * the DataFrame launches no Spark job. Spark's own inference
+    * (`ParquetUtils.inferSchema` with mergeSchema off) reads that same
+    * footer, but through `SchemaMergeUtils.mergeSchemasInParallel`, which
+    * runs a `parallelize(...).collect()` job even for a single file — at
+    * bench scale a whole job per table read. The footer is the one
+    * inference would pick, so schemas, plans and results are unchanged;
+    * Spark still discovers partition columns (`month`) from directory
+    * names and appends them to the given data schema. A path with no
+    * data file goes to `spark.read.parquet` as is, so it fails with the
+    * error Spark gives today.
+    */
+  def readParquet(spark: SparkSession, path: String): DataFrame =
+    footerSchema(spark, path).fold(spark.read.parquet(path))(
+      spark.read.schema(_).parquet(path))
+
   /** The one cold-start rule: a parquet table that was never written
-    * reads as `None`. Only the "nothing written yet" conditions count as
-    * absent — a missing path (`PATH_NOT_FOUND`, or a raw
-    * `FileNotFoundException` from the streaming-sink metadata probe
-    * that some Spark builds run before path resolution) and a directory
-    * with no data files to infer a schema from
-    * (`UNABLE_TO_INFER_SCHEMA`, what a zero-row write leaves). Any other
-    * failure — a conflicting or corrupt schema, a path that is not a
-    * table — propagates: reading it as empty would reset a watermark to
-    * the epoch or switch off cross-batch dedup.
+    * reads as `None`. The listing decides it before any analysis runs:
+    * the path is missing, or it holds no data file (only `_SUCCESS`,
+    * replay markers and other `_`/`.` names, what a zero-row write
+    * leaves). Any other failure — a conflicting or corrupt schema, a
+    * path that is not a table — propagates from the read: reading it as
+    * empty would reset a watermark to the epoch or switch off
+    * cross-batch dedup.
     */
   def readParquetIfPresent(spark: SparkSession, path: String): Option[DataFrame] =
-    try Some(spark.read.parquet(path))
-    catch {
-      case e: AnalysisException if AbsentConditions.contains(e.getCondition) =>
-        None
-      case _: java.io.FileNotFoundException => None
-    }
+    footerSchema(spark, path).map(spark.read.schema(_).parquet(path))
 
-  private val AbsentConditions = Set("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA")
+  /** The schema `ParquetUtils.inferSchema` would infer for `path` with
+    * mergeSchema off, or `None` when the path holds no data file. Leaf
+    * files are listed the way `InMemoryFileIndex` lists them (names
+    * starting with `_` or `.` skipped, the two summary files kept) and
+    * sorted by path string; `_common_metadata` wins, then `_metadata`,
+    * then the first data file. The footer is read and converted the way
+    * `ParquetFileFormat.mergeSchemasInParallel` reads it (row groups
+    * skipped, the session's `SQLConf` for the type mapping).
+    */
+  private def footerSchema(spark: SparkSession, path: String): Option[StructType] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val root = new Path(path)
+    val fs = root.getFileSystem(conf)
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (!st.isDirectory) Seq(st)
+      else fs.listStatus(st.getPath).toSeq
+        .filterNot(c => hiddenName(c.getPath.getName)).flatMap(leaves)
+    val files =
+      (try leaves(fs.getFileStatus(root))
+       catch { case _: java.io.FileNotFoundException => Nil })
+        .sortBy(_.getPath.toString)
+    def named(n: String) = files.find(_.getPath.getName == n)
+    val data = files.filterNot(f => SummaryFiles(f.getPath.getName))
+    data.headOption.map { first =>
+      val picked = named(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE)
+        .orElse(named(ParquetFileWriter.PARQUET_METADATA_FILE))
+        .getOrElse(first)
+      val footer = ParquetFooterReader.readFooter(
+        HadoopInputFile.fromStatus(picked, conf),
+        ParquetMetadataConverter.SKIP_ROW_GROUPS)
+      ParquetFileFormat.readSchemaFromFooter(
+        new Footer(picked.getPath, footer),
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf))
+    }
+  }
+
+  private val SummaryFiles = Set(ParquetFileWriter.PARQUET_COMMON_METADATA_FILE,
+    ParquetFileWriter.PARQUET_METADATA_FILE)
+
+  /** `HadoopFSUtils.shouldFilterOutPathName`: what a file index skips. */
+  private def hiddenName(name: String): Boolean =
+    ((name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")) &&
+      !(name.startsWith("_common_metadata") || name.startsWith("_metadata"))
 
   /** S3: list live month partitions of a fact table — the system.parts
     * metadata scan (v1/dag:88-94) becomes a partition-column distinct,
     * answered from directory listing + partition pruning, no data read.
     */
   def listMonthPartitions(spark: SparkSession, path: String): Seq[String] = {
-    val df = spark.read.parquet(path)
+    val df = readParquet(spark, path)
     if (!df.columns.contains("month")) Seq.empty
     else df.select("month").distinct().collect()
       .map(_.get(0).toString).toSeq.sorted

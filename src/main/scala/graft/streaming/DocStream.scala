@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types._
 
 import graft.operators.{Dedup, Quality}
+import graft.sources.IO
 
 /** Streaming corpus ingest: the training-data tier's arrival path.
   * Documents stream in (directory source here; Kafka/queue at scale),
@@ -124,7 +125,7 @@ object DocStream {
     * partition column is commit plumbing, not document data.
     */
   def readCorpus(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path).drop("ingest_batch")
+    IO.readParquet(spark, path).drop("ingest_batch")
 
   /** First-batch bootstrap: an index that was never written reads as
     * empty ([[graft.sources.IO.readParquetIfPresent]]). Anything else —
@@ -135,7 +136,7 @@ object DocStream {
     */
   private def readIndexOrEmpty(spark: SparkSession, indexPath: String,
                                like: DataFrame, batchId: Long): DataFrame =
-    graft.sources.IO.readParquetIfPresent(spark, indexPath) match {
+    IO.readParquetIfPresent(spark, indexPath) match {
       // exclude this batch's own partition: a crashed earlier attempt of
       // the SAME batch may have landed signatures, and a replay that saw
       // its own fingerprints would drop every document as a duplicate.

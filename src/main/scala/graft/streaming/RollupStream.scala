@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 import graft.pipeline.Rollup
+import graft.sources.IO
 
 /** Streaming materialized-view maintenance — the ClickHouse pattern
   * where a materialized view populates an Aggregating/SummingMergeTree
@@ -88,7 +89,7 @@ object RollupStream {
                           windowSec: Long): DataFrame =
     latestCommittedGen(spark, statePath, before = Long.MaxValue) match {
       case Some(g) => Rollup.finalizeFunnel(
-        spark.read.parquet(s"$statePath/gen=$g"), keys, steps, windowSec)
+        IO.readParquet(spark, s"$statePath/gen=$g"), keys, steps, windowSec)
       case None => throw new IllegalStateException(
         s"funnel state at $statePath has no committed generation")
     }
@@ -129,7 +130,7 @@ object RollupStream {
                         keys: Seq[String], n: Int): DataFrame =
     latestCommittedGen(spark, statePath, before = Long.MaxValue) match {
       case Some(g) => Rollup.finalizeTopK(
-        spark.read.parquet(s"$statePath/gen=$g"), keys, n)
+        IO.readParquet(spark, s"$statePath/gen=$g"), keys, n)
       case None => throw new IllegalStateException(
         s"topK state at $statePath has no committed generation")
     }
@@ -167,7 +168,7 @@ object RollupStream {
                       depth: Int, width: Int): DataFrame =
     latestCommittedGen(spark, statePath, before = Long.MaxValue) match {
       case Some(g) => Rollup.finalizeCm(
-        spark.read.parquet(s"$statePath/gen=$g"), keys, terms, termCol,
+        IO.readParquet(spark, s"$statePath/gen=$g"), keys, terms, termCol,
         depth, width)
       case None => throw new IllegalStateException(
         s"CM state at $statePath has no committed generation")
@@ -211,7 +212,7 @@ object RollupStream {
                             res: Double, nbins: Int): DataFrame =
     latestCommittedGen(spark, statePath, before = Long.MaxValue) match {
       case Some(g) => Rollup.finalizeQuantile(
-        spark.read.parquet(s"$statePath/gen=$g"), keys, qs, lo, res, nbins)
+        IO.readParquet(spark, s"$statePath/gen=$g"), keys, qs, lo, res, nbins)
       case None => throw new IllegalStateException(
         s"quantile state at $statePath has no committed generation")
     }
@@ -227,7 +228,7 @@ object RollupStream {
     requireKeep(keepGenerations)
     val merged = latestCommittedGen(spark, statePath, before = batchId) match {
       case Some(g) =>
-        mergeWith(spark.read.parquet(s"$statePath/gen=$g"), inc)
+        mergeWith(IO.readParquet(spark, s"$statePath/gen=$g"), inc)
       case None => inc
     }
     merged.write.mode("overwrite").parquet(s"$statePath/gen=$batchId")
@@ -239,7 +240,7 @@ object RollupStream {
                     keys: Seq[String], k: Int): DataFrame =
     latestCommittedGen(spark, statePath, before = Long.MaxValue) match {
       case Some(g) => Rollup.finalizeState(
-        spark.read.parquet(s"$statePath/gen=$g"), keys, k)
+        IO.readParquet(spark, s"$statePath/gen=$g"), keys, k)
       case None => throw new IllegalStateException(
         s"rollup state at $statePath has no committed generation")
     }

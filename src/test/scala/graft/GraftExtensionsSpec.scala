@@ -159,4 +159,10 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(found == Seq("dir" -> Seq("Sessions.scala"), "gone" -> Seq(),
       "local" -> Seq("DedupCluster.scala", "Pipelines.scala")))
   }
+
+  test("source guard: one parquet reader — schemas from a footer, not an " +
+      "inference job") {
+    assert(calling("src/main/scala", """\.read\s*\.\s*parquet\s*\(""")
+      == Seq("IO.scala"))
+  }
 }

@@ -1,8 +1,15 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, GraftAccess}
+import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.util.QueryExecutionListener
 
 import graft.pipeline.{DictionaryRefresh, IncrementalLoad, Retention}
+import graft.sources.IO
 
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -69,6 +76,63 @@ class PipelineSpec extends SparkSpec {
       IncrementalLoad.run(spark, events, path, cfg))
     assert(e.getCondition == "COLUMN_ALREADY_EXISTS", e.getMessage)
     assert(files == before)
+  }
+
+  test("cold start is decided by the listing: a missing and a " +
+      "_SUCCESS-only target run no failing analysis") {
+    val failures = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = ()
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit =
+        failures.incrementAndGet()
+    }
+    val marked = tempDir("cold_quiet")
+    new java.io.File(marked).mkdirs()
+    assert(new java.io.File(marked, "_SUCCESS").createNewFile())
+    GraftAccess.drainListenerBus(spark) // earlier tests' events stay out
+    spark.listenerManager.register(listener)
+    try {
+      IncrementalLoad.run(spark, events, tempDir("cold_quiet_missing"), cfg)
+      IncrementalLoad.run(spark, events, marked, cfg)
+      GraftAccess.drainListenerBus(spark)
+    } finally spark.listenerManager.unregister(listener)
+    assert(failures.get == 0)
+  }
+
+  test("readParquet: a month-partitioned fact table with _SUCCESS and " +
+      ".crc files resolves with no job, to the schema Spark infers") {
+    val path = tempDir("footer")
+    IO.writeFact(events, path, "ts", "event_id", overwritePartitions = false)
+    val names = java.nio.file.Files.walk(java.nio.file.Paths.get(path))
+      .iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(names.contains("_SUCCESS") && names.exists(_.endsWith(".crc")))
+    val m = RunMetrics.attach(spark)
+    var schema: StructType = null
+    val s = try m.measure(spark) { schema = IO.readParquet(spark, path).schema }
+      finally spark.sparkContext.removeSparkListener(m)
+    assert(s.jobs == 0)
+    val inferred = spark.read.parquet(path).schema
+    assert(schema == inferred)
+    assert(schema.last.name == "month" &&
+      schema("month").dataType == org.apache.spark.sql.types.TimestampType)
+  }
+
+  test("readParquet: files with different schemas read as the first by " +
+      "path, the one spark.read.parquet infers from") {
+    val path = tempDir("two_schemas")
+    new java.io.File(path).mkdirs()
+    def place(df: DataFrame, name: String): Unit = {
+      val one = tempDir("one_file")
+      df.coalesce(1).write.parquet(one)
+      val part = new java.io.File(one).listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.copy(part.toPath, new java.io.File(path, name).toPath)
+    }
+    place(Seq((1L, "x")).toDF("a", "b"), "part-1.parquet")
+    place(Seq((2L, 1.5)).toDF("a", "c"), "part-0.parquet")
+    val schema = IO.readParquet(spark, path).schema
+    assert(schema == spark.read.parquet(path).schema)
+    assert(schema.fieldNames.toSeq == Seq("a", "c"))
   }
 
   test("retention rewrite drops rows older than the horizon") {

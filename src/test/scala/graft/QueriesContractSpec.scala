@@ -40,6 +40,19 @@ class QueriesContractSpec extends SparkSpec {
     }
   }
 
+  test("every fixture table resolves with no Spark job, to the schema " +
+      "Spark's own inference gives") {
+    val m = RunMetrics.attach(spark)
+    try Tables.all.foreach { t =>
+      var schema: org.apache.spark.sql.types.StructType = null
+      val s = m.measure(spark) { schema = Tables.load(spark, sf, t).schema }
+      assert(s.jobs == 0, s"$t: schema resolution ran ${s.jobs} job(s)")
+      val inferred = Tables.normalize(t,
+        spark.read.parquet(s"$sf/$t.parquet")).schema
+      assert(schema == inferred, t)
+    } finally spark.sparkContext.removeSparkListener(m)
+  }
+
   test("entry returns rows (driver smoke contract)") {
     assert(SparkEntry.entry(spark).count() > 0)
   }
