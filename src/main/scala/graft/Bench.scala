@@ -12,7 +12,8 @@ import org.apache.spark.sql.SparkSession
   *
   * Each entry's fastest pass also lands its layers in the `entries` map
   * (construction vs execution seconds, jobs and eager jobs, stages,
-  * task/GC seconds, shuffle write, spill, peak execution memory), so
+  * task/GC seconds, shuffle write, spill, peak execution memory,
+  * generated classes compiled), so
   * `SPARK_GRAFT_ONLY='graph_.*'` is the graph tier's idle-box probe.
   */
 object Bench {
@@ -199,6 +200,7 @@ object Bench {
     def layers(s: RunMetrics.Sample): String =
       s"""{"construct_sec":${s.constructSec},"exec_sec":${s.execSec},""" +
         s""""jobs":${s.jobs},"eager_jobs":${s.eagerJobs},""" +
+        s""""compiles":${s.compiles},""" +
         s""""stages":${s.stages},"task_sec":${s.taskSec},""" +
         s""""gc_sec":${s.gcSec},"shuffle_write_b":${s.shuffleWriteB},""" +
         s""""spill_b":${s.spillB},"peak_exec_b":${s.peakExecB}}"""

@@ -2,6 +2,7 @@ package graft
 
 import scala.collection.mutable.ArrayBuffer
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, StageInfo}
 import org.apache.spark.sql.{DataFrame, GraftAccess, SparkSession}
@@ -17,6 +18,11 @@ import org.apache.spark.sql.{DataFrame, GraftAccess, SparkSession}
   * before the mark ran eagerly during construction (checkpoints, collected
   * stats); the rest belong to execution. An unmarked body is all
   * construction.
+  *
+  * Besides the listener's stage rows, a sample counts the classes the
+  * body compiled (Spark's JVM-wide codegen compilation counter): a
+  * compile is a miss in the generated-class cache, so a repeated shape
+  * that still compiles shows the cache evicting.
   */
 final class RunMetrics extends SparkListener {
   import RunMetrics._
@@ -48,9 +54,11 @@ final class RunMetrics extends SparkListener {
     GraftAccess.drainListenerBus(spark)
     synchronized { stages.clear(); jobStartMs.clear() }
     markNs = -1L
+    val c0 = compilations
     val t0 = System.nanoTime()
     body
     val t1 = System.nanoTime()
+    val compiles = compilations - c0
     GraftAccess.drainListenerBus(spark)
     val (cNs, cMs) = if (markNs < 0) (t1, Long.MaxValue) else (markNs, markMs)
     synchronized {
@@ -62,6 +70,7 @@ final class RunMetrics extends SparkListener {
         // a job started at the mark's own millisecond belongs to the
         // write that follows it: an eager job has finished by then
         eagerJobs = jobStartMs.count(_ < cMs),
+        compiles = compiles,
         rows = rows)
     }
   }
@@ -113,11 +122,16 @@ object RunMetrics {
     }
   }
 
+  /** Generated classes compiled in this JVM so far. */
+  def compilations: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
   /** One measured body. `peakExecB` is the largest stage's summed task
-    * peak execution memory, an upper bound on what was live at once.
+    * peak execution memory, an upper bound on what was live at once;
+    * `compiles` is the generated classes the body compiled.
     */
   final case class Sample(sec: Double, constructSec: Double, jobs: Int,
-                          eagerJobs: Int, rows: Seq[StageRow]) {
+                          eagerJobs: Int, compiles: Long,
+                          rows: Seq[StageRow]) {
     def execSec: Double = sec - constructSec
     def stages: Int = rows.size
     def taskSec: Double = rows.map(_.taskMs).sum / 1000.0

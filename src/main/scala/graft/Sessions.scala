@@ -12,7 +12,18 @@ import org.apache.spark.sql.SparkSession
   * reference-scale default of 200 is wrong in both directions).
   *
   * Only settings that change results or on-disk format, or size the
-  * run, are pinned. Planning is left to Spark's defaults, which already
+  * run, are pinned. One size is the JVM-wide generated-class cache
+  * (`spark.sql.codegen.cache.maxEntries`, a static setting read once,
+  * when Spark's code generator first loads). Spark's default of 100 is
+  * below the engine's recurring working set: one pass over perfbench's
+  * five-entry operator mix generates ~150 distinct classes, so every
+  * pass evicted and recompiled them through Janino. The bound comes
+  * from a count: a full `graft.Bench` sweep (sf0.1, every build and
+  * entry) compiles 4,213 distinct classes when nothing is evicted, so
+  * 8192 holds the whole registry with room to grow. Holding them costs
+  * metaspace, not time: 254 MB after GC at the end of that sweep,
+  * against 218 MB at the default, which compiled 9,356 times.
+  * Planning is left to Spark's defaults, which already
   * give what the engine relies on: AQE owns runtime re-planning
   * (partition coalescing, skew-join splitting, broadcast
   * demotion/promotion by observed sizes), and runtime bloom-filter
@@ -43,6 +54,8 @@ object Sessions {
       // otherwise
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.files.maxPartitionBytes", s"${256 * 1024 * 1024}")
+      // each generated class compiles once per JVM (see the rule above)
+      .config("spark.sql.codegen.cache.maxEntries", "8192")
       .config("spark.ui.enabled", "false")
 
   def start(b: SparkSession.Builder): SparkSession = {

@@ -88,9 +88,11 @@ object Relational {
     * keeps an arbitrary row absent a version column; we deviate on
     * purpose and document it.
     *
-    * Scale note: one shuffle on the key (window partitionBy); at 100 TB
-    * the key is also the storage shard key (S6) so the exchange is reused
-    * by the subsequent repartition-by-key write.
+    * Scale note: one shuffle on the key (window partitionBy). A write
+    * that then repartitions on more columns, as
+    * [[graft.sources.IO.writeFact]] does on `(month, key)`, shuffles
+    * again: Spark drops a repartition only when its input is already
+    * hash-partitioned on the same expressions.
     */
   def dedupLatest(df: DataFrame, keys: Seq[String], versionCol: String,
                   tieBreak: Seq[String] = Nil): DataFrame = {

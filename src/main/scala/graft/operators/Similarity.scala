@@ -15,9 +15,10 @@ import graft.functions.Rounding
   * [[graft.functions.CosineSimilarity]]) — Spark's higher-order
   * functions are CodegenFallback (interpreted row-at-a-time even
   * inside a WholeStageCodegen stage), so the HOF spellings
-  * ([[dot]]/[[l2Norm]]/[[cosine]]) remain only on the brute-force
-  * oracle-parity paths. Both forms share one numeric contract — a
-  * sequential left-to-right double fold with per-element casts,
+  * ([[dot]]/[[l2Norm]]/[[cosine]]) stay off the per-pair scoring paths:
+  * they are the reference the fused forms are checked against, and
+  * serve one-off per-row norms. Both forms share one numeric contract
+  * — a sequential left-to-right double fold with per-element casts,
   * bit-identical to the oracle's per-element SQL sum — so they are
   * interchangeable without moving a hash.
   *
@@ -64,10 +65,10 @@ object Similarity {
   /** The fused single-pass codegen'd cosine
     * ([[graft.functions.CosineSimilarity]]) with the same rounding and
     * zero-norm rule — bit-identical to [[cosine]] (same per-element
-    * double fold; `ann_brute_topk` vs `ann_brute_topk_native` pin the
-    * equality against one oracle), but it compiles to one loop instead
-    * of interpreting three HOF folds per row, so every internal hot
-    * path scores with THIS form.
+    * double fold; CosineSimilaritySpec pins the equality on fixture
+    * pairs), but it compiles to one loop instead of interpreting three
+    * HOF folds per row, so every internal hot path, and the default
+    * score of the brute-force top-k family, scores with THIS form.
     */
   def cosineFused(a: Column, b: Column, scale: Int = 6): Column =
     Rounding.pround(graft.functions.CosineSimilarity.column(a, b), scale)
@@ -86,13 +87,13 @@ object Similarity {
     * is embarrassingly parallel. Deterministic ordering: (score desc,
     * candidate id).
     *
-    * `scoreFn` defaults to the HOF cosine; pass the fused native
-    * expression (graft.functions.CosineSimilarity) for the single-pass
-    * codegen'd variant — results are bit-identical.
+    * `scoreFn` defaults to the fused codegen'd [[cosineFused]]; the HOF
+    * [[cosine]] scores bit-identically but interprets three folds per
+    * row. Pass another score (e.g. a negated distance) to rank by it.
     */
   def bruteForceTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
                      vecCol: String, k: Int,
-                     scoreFn: (Column, Column) => Column = cosine(_, _)): DataFrame = {
+                     scoreFn: (Column, Column) => Column = cosineFused(_, _)): DataFrame = {
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
     // fanOut: the |corpus|×|queries| fused-cosine scan runs at scan
     // parallelism — one task on a single-row-group vector file
@@ -130,7 +131,7 @@ object Similarity {
   def hardNegativesTopK(corpus: DataFrame, queries: DataFrame,
                         idCol: String, vecCol: String, labelCol: String,
                         k: Int,
-                        scoreFn: (Column, Column) => Column = cosine(_, _))
+                        scoreFn: (Column, Column) => Column = cosineFused(_, _))
       : DataFrame = {
     require(k >= 1, s"k >= 1 required: $k")
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
@@ -182,7 +183,7 @@ object Similarity {
     */
   def mmrTopK(corpus: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, k: Int, lambda: Double, shortlist: Int,
-              scoreFn: (Column, Column) => Column = cosine(_, _))
+              scoreFn: (Column, Column) => Column = cosineFused(_, _))
       : DataFrame = {
     require(k >= 1, s"k >= 1 required: $k")
     require(shortlist >= k, s"shortlist $shortlist must be >= k $k")
@@ -1388,8 +1389,6 @@ object Similarity {
     val centDf = spark.createDataFrame(
       centroids.zipWithIndex.map { case (c, i) => (i, c.toArray) })
       .toDF("cell", "centroid")
-    val cosN = (x: Column, y: Column) => Rounding.pround(
-      graft.functions.CosineSimilarity.column(x, y), 6)
     val newCells = corpusCellAssignment(newBatch, idCol, vecCol, centDf)
       .persist()
     val keptCells = corpusCellAssignment(kept, idCol, vecCol, centDf)
@@ -1430,12 +1429,12 @@ object Similarity {
         col("cv").as("vb"))
       val newPairs = a.join(b, Seq("cell"))
         .filter(col("id_a") < col("id_b"))
-        .filter(cosN(col("va"), col("vb")) >= minCosine)
+        .filter(cosineFused(col("va"), col("vb")) >= minCosine)
         .select("id_a", "id_b")
       val k = keptCells.select(col("cell"), col("cand_id").as("id_b"),
         col("cv").as("vb"))
       val keptHits = a.join(k, Seq("cell"))
-        .filter(cosN(col("va"), col("vb")) >= minCosine)
+        .filter(cosineFused(col("va"), col("vb")) >= minCosine)
         .select(col("id_a").as("hit_id")).distinct()
       // components among batch rows only; kept-attachment then flows
       // along them: a component is redundant iff any member hit kept.
@@ -1449,7 +1448,7 @@ object Similarity {
       val tainted = labels.join(keptHits, col("id") === col("hit_id"))
         .select(col("cluster_id").as("bad_cluster")).distinct()
       val csims = newCells.join(broadcast(centDf), Seq("cell"))
-        .select(col("cand_id"), cosN(col("cv"), col("centroid")).as("csim"))
+        .select(col("cand_id"), cosineFused(col("cv"), col("centroid")).as("csim"))
       val keep = csims
         .join(labels, col("cand_id") === col("id"))
         .join(broadcast(tainted), col("cluster_id") === col("bad_cluster"),
@@ -1528,12 +1527,10 @@ object Similarity {
     require(keepFrac > 0 && keepFrac <= 1,
       s"keepFrac in (0,1]: $keepFrac")
     import org.apache.spark.sql.expressions.Window
-    val cosN = (x: Column, y: Column) => Rounding.pround(
-      graft.functions.CosineSimilarity.column(x, y), 6)
     val sims = corpusCellAssignment(corpus, idCol, vecCol, centDf)
       .join(broadcast(centDf), Seq("cell"))
       .select(col("cand_id").as(idCol), col("cell"),
-        cosN(col("cv"), col("centroid")).as("proto_sim"))
+        cosineFused(col("cv"), col("centroid")).as("proto_sim"))
     val counts = sims.groupBy("cell").agg(count(lit(1)).as("n_cell"))
     val order = if (keepHardest) col("proto_sim").asc else col("proto_sim").desc
     val w = Window.partitionBy("cell").orderBy(order, col(idCol))
@@ -1563,14 +1560,8 @@ object Similarity {
             "within-cell pairing would fan out quadratically on one task; " +
             "raise nlist so cells stay ~|corpus|/nlist-sized (or raise " +
             "maxCellSize if the skew is intended)")
-      // the fused native cosine (one array pass, whole-stage codegen)
-      // is bit-equal to the HOF form after pround — proven by
-      // ann_brute_topk_native sharing ann_brute_topk's oracle — and the
-      // pair join is the hot path here
-      val cosN = (x: Column, y: Column) => Rounding.pround(
-        graft.functions.CosineSimilarity.column(x, y), 6)
       val withSim = cells.join(broadcast(centDf), Seq("cell"))
-        .withColumn("csim", cosN(col("cv"), col("centroid")))
+        .withColumn("csim", cosineFused(col("cv"), col("centroid")))
         .drop("centroid")
       val a = withSim.select(col("cell"), col("cand_id").as("id_a"),
         col("cv").as("va"))
@@ -1578,7 +1569,7 @@ object Similarity {
         col("cv").as("vb"))
       val pairs = a.join(b, Seq("cell"))
         .filter(col("id_a") < col("id_b"))
-        .filter(cosN(col("va"), col("vb")) >= minCosine)
+        .filter(cosineFused(col("va"), col("vb")) >= minCosine)
         .select("id_a", "id_b")
       // alternating-star for the same reason as the incremental path:
       // cosine chains make the component diameter unbounded, and label

@@ -34,10 +34,12 @@ import graft.sources.IO
   *
   * Scale: the watermark is the only driver-side value; everything else is
   * one distributed plan — the incremental filter pushes to the source
-  * scan, the dedup window and the write share the shard-key exchange, and
-  * dynamic overwrite touches only the months present in the batch. The
-  * source is read once: the row count comes from an observation on the
-  * write itself.
+  * scan, and dynamic overwrite touches only the months present in the
+  * batch. The plan shuffles twice: the dedup window on the key, then the
+  * write's `repartition(month, key)` ([[IO.writeFact]]), because Spark
+  * drops a repartition only when its input is already hash-partitioned
+  * on the same expressions. The source is read once: the row count comes
+  * from an observation on the write itself.
   */
 object IncrementalLoad {
 

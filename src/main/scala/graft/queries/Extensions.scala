@@ -1881,9 +1881,10 @@ object Extensions {
         .orderBy("query_id", "pick")
     }),
 
-    // Same contract as ann_brute_topk but scored by the fused native
-    // Catalyst expression (one array pass, whole-stage codegen) instead
-    // of the three-pass HOF formulation; same oracle — bit-equal scores.
+    // Same contract and oracle as ann_brute_topk, with the fused native
+    // score (one array pass, whole-stage codegen) passed explicitly
+    // rather than taken as bruteForceTopK's default: the spelling a
+    // caller with its own scoreFn uses.
     "ann_brute_topk_native" -> ((s, dir) => {
       val emb = t(s, dir, "embeddings")
       Similarity.bruteForceTopK(emb, emb.filter(col("vec_id") < 10),

@@ -165,4 +165,9 @@ class GraftExtensionsSpec extends SparkSpec {
     assert(calling("src/main/scala", """\.read\s*\.\s*parquet\s*\(""")
       == Seq("IO.scala"))
   }
+
+  test("source guard: the generated-class cache is sized in Sessions only") {
+    assert(calling("src/main/scala", """codegen\.cache\.maxEntries""")
+      == Seq("Sessions.scala"))
+  }
 }

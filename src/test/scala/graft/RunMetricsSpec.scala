@@ -36,6 +36,18 @@ class RunMetricsSpec extends SparkSpec {
     assert(s.eagerJobs == s.jobs)
   }
 
+  test("compiles counts the classes the body compiled: a new shape " +
+      "compiles, the same shape again compiles nothing") {
+    def run() = metrics.measure(spark) {
+      spark.range(8).selectExpr("id * 7919 + 104729 AS x")
+        .write.format("noop").mode("overwrite").save()
+    }
+    val first = run()
+    assert(first.compiles >= 1L)
+    assert(run().compiles == 0L)
+    assert(metrics.measure(spark)(()).compiles == 0L)
+  }
+
   test("isolate drops every cached table and persisted RDD") {
     spark.range(100).createOrReplaceTempView("run_metrics_v")
     spark.catalog.cacheTable("run_metrics_v")
@@ -92,8 +104,8 @@ class RunMetricsSpec extends SparkSpec {
     val entries = (doc \ "entries").extract[Map[String, Map[String, Double]]]
     assert(entries.keySet == names)
     val fields = Set("construct_sec", "exec_sec", "jobs", "eager_jobs",
-      "stages", "task_sec", "gc_sec", "shuffle_write_b", "spill_b",
-      "peak_exec_b")
+      "compiles", "stages", "task_sec", "gc_sec", "shuffle_write_b",
+      "spill_b", "peak_exec_b")
     entries.foreach { case (n, e) =>
       assert(e.keySet == fields, n)
       assert(e.values.forall(v => !v.isNaN && !v.isInfinite), n)
