@@ -123,7 +123,8 @@ object RunMetrics {
   }
 
   /** Generated classes compiled in this JVM so far. */
-  def compilations: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  private def compilations: Long =
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
   /** One measured body. `peakExecB` is the largest stage's summed task
     * peak execution memory, an upper bound on what was live at once;
